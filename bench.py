@@ -417,8 +417,11 @@ def _spot_rotation(rnd: int) -> list[str]:
 
 
 def _host_ms_per_job(spark, n: int = 20) -> float:
-    """Median wall of ``spark.range(1).count()`` — the host's fixed
+    """Median wall of ``spark.range(1).collect()`` — the host's fixed
     per-job cost (scheduler + driver/executor round-trip, no real work).
+    ``collect()`` runs ONE job; ``count()`` runs two under AQE (the
+    partial-count shuffle stage, then the final aggregate), so records
+    taken with the older ``count()`` probe read about 2x the per-job cost.
     This machine drifts between phases (30 → 156 ms/job measured across
     and WITHIN rounds), and job-count-bound queries swing 1.5-2.5x with
     it; recording the phase alongside the attempts lets cross-round
@@ -427,7 +430,7 @@ def _host_ms_per_job(spark, n: int = 20) -> float:
     walls = []
     for _ in range(n):
         t0 = time.perf_counter()
-        spark.range(1).count()
+        spark.range(1).collect()
         walls.append(time.perf_counter() - t0)
     walls.sort()
     mid = len(walls) // 2

@@ -30,14 +30,6 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-#: Test hook (plan-hygiene suites only): when False, :func:`bounded_tail`
-#: skips both materializations and returns the LAZY full plan, so the
-#: registry-wide plan sweeps (unpartitioned windows, BNLJ count pins,
-#: no-Python paths) keep walking the REAL tail shape instead of a
-#: collapsed LogicalRDD scan. Production default is True; a dedicated
-#: equivalence test pins eager == lazy rows.
-EAGER_TAILS = True
-
 #: Target rows per loop shuffle partition. Loop frames are slim rows
 #: (two bigints for labels/edges, (cid, dim, n, m) for centroid updates
 #: — ~50 B shuffled), so 2 M rows ≈ 100 MB per partition, the guide's
@@ -46,32 +38,11 @@ LOOP_ROWS_PER_PARTITION = 2_000_000
 
 
 @contextmanager
-def loop_execution(
-    spark,
-    n_rows: int,
-    rows_per_partition: int = LOOP_ROWS_PER_PARTITION,
-    auto_broadcast_off: bool = False,
-):
+def loop_execution(spark, n_rows: int, rows_per_partition: int = LOOP_ROWS_PER_PARTITION):
     """Run an iterative loop body with AQE off and a shuffle width derived
     from ``n_rows`` (the loop's dominant materialized row count), restoring
     the session's settings on every exit path. Yields the derived width so
-    the caller can pin explicit repartitions to the same number.
-
-    ``auto_broadcast_off=True`` additionally disables auto-broadcast
-    inside the posture, forcing the loop's joins to the sort-merge shape
-    they take at cluster scale (where no side fits a broadcast). This was
-    MEASURED as a net LOSS on every loop family at bench scale and is
-    therefore off by default (r14 interleaved A/B, best-of-3): it does
-    cut one broadcast-BUILD job per round (q100's CC 49→37 jobs, q72
-    21→18, q240's peel 28→20), but the sort-merge rounds pay exchange +
-    sort stages of the node-sized side per round — and for the k-core
-    peel four exchanges of the EDGE side (115 vs 66 stages) — which cost
-    more wall than the build jobs they replace (q100 6.56s on vs 7.40s
-    off; q72 2.08 vs 2.71; q240 2.55 vs 3.17; q242 the one wash at 2.37
-    vs 2.31). At 100 TB the planner sizes the loop sides past any
-    threshold and picks sort-merge on its own, so the default changes
-    nothing at scale; the knob exists for operators whose cached big
-    side should never be auto-broadcast (none currently opt in)."""
+    the caller can pin explicit repartitions to the same number."""
     conf = spark.conf
     loop_parts = max(1, -(-int(n_rows) // int(rows_per_partition)))
     old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
@@ -79,22 +50,18 @@ def loop_execution(
         "spark.sql.shuffle.partitions",
         str(spark.sparkContext.defaultParallelism),
     )
-    old_bc = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     try:
         conf.set("spark.sql.adaptive.enabled", "false")
         conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-        if auto_broadcast_off:
-            conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         yield loop_parts
     finally:
         conf.set("spark.sql.adaptive.enabled", old_aqe)
         conf.set("spark.sql.shuffle.partitions", old_sp)
-        conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
 
 
 def bounded_tail(spark, head, build, head_pins=()):
     """Execute a statistic's index-scale tail eagerly under the loop
-    posture (r13 optimization: the daily-series statistics family).
+    posture (the daily-series statistics family).
 
     ``head`` is a frame whose row count is BOUNDED BY CONSTRUCTION
     regardless of corpus size (the |days| daily pre-agg, a ≤k-bin
@@ -104,30 +71,22 @@ def bounded_tail(spark, head, build, head_pins=()):
     times — idx, totals, and the den re-read). ``build(head_frame)``
     constructs the tail and returns ``(result_df, pins)``.
 
-    Eager path (production): ``localCheckpoint`` the head once — every
-    consumer now reads a |days|-row LogicalRDD, ONE corpus pass total —
-    then run the whole tail inside :func:`loop_execution` sized by the
-    head's actual row count and cut the ≤k-row result out with a second
-    checkpoint so the tail EXECUTES under the posture (the conf is
-    execution-time state; a lazy return would run under the caller's
-    session settings). Pins are released immediately after — the
-    checkpointed result no longer references them.
+    The head is ``localCheckpoint``-ed once — every consumer then reads a
+    |days|-row LogicalRDD, ONE corpus pass total — and counted; the tail
+    then runs through :func:`posture_tail` sized by that count. The
+    corpus-sized head stage itself runs under the session's own settings
+    (AQE sizing, skew splits intact).
 
     Scale honesty (the loop_execution argument): the tail's shape is
     fixed and its frames are bounded by construction, so the derived
     shuffle width (1 partition until 2M head rows) is scale-correct and
     AQE's per-exchange query-stage jobs — driver round-trips ANY
-    cluster pays — buy nothing. The corpus-sized head stage itself runs
-    under the session's own settings (AQE sizing, skew splits intact).
-
-    Results are identical on both paths: the tail arithmetic is
-    partitioning-independent by contract (dist_rank/dist_cumsum), and
-    checkpoints preserve the computed row order.
+    cluster pays — buy nothing. Checkpoints preserve the computed row
+    order, so an ORDER BY tail returns its rows in order.
 
     ``head_pins``: frames persisted inside the HEAD's subtree (e.g. a
     per-user pre-agg feeding two head consumers) — released right after
-    the head checkpoint on the eager path, deferred with the tail pins
-    on the lazy path.
+    the head checkpoint, whether it succeeds or fails.
 
     FAULT TOLERANCE (the q240 caveat, centralized): ``localCheckpoint``
     stores blocks with NO lineage, so an executor loss mid-query fails
@@ -136,80 +95,55 @@ def bounded_tail(spark, head, build, head_pins=()):
     ``checkpoint()`` (a checkpoint dir) when retry-safety matters more
     than the write, or rely on job-level retry; on local mode there is
     no executor to lose.
-
-    Pin hygiene: the tail's pins are released on EVERY exit path. A
-    ``build`` that raises can only leak cache-registry MARKS, never
-    blocks — ``persist()`` is lazy and nothing materializes until the
-    result checkpoint below runs the job — and the checkpoint itself is
-    wrapped so a mid-job failure unpersists whatever ``build`` pinned.
     """
-    if not EAGER_TAILS:
-        from .plans.common import materialize_release
-
-        res, pins = build(head)
-        return materialize_release(res, *_as_pins(pins), *_as_pins(head_pins))
-    h = head.localCheckpoint()
-    for p in _as_pins(head_pins):
-        p.unpersist(False)
-    n_rows = h.count()
-    pins: list = []
     try:
-        with loop_execution(spark, n_rows):
-            res, built = build(h)
-            pins = _as_pins(built)
-            out = res.localCheckpoint()
-    except BaseException:
-        for p in pins:
-            try:
-                p.unpersist(False)
-            except Exception:
-                pass  # best-effort cleanup; the original error propagates
-        raise
-    for p in pins:
-        p.unpersist(False)
-    return out
+        h = head.localCheckpoint()
+    finally:
+        _release(_as_pins(head_pins))
+    return posture_tail(spark, h.count(), lambda _parts: build(h))
 
 
-def posture_tail(spark, n_rows, build, pins=()):
+def posture_tail(spark, n_rows: int, build, pins=()):
     """Run a FIXED-SHAPE tail over already-materialized (persisted)
-    inputs under the loop posture and checkpoint its result —
+    inputs under the loop posture and checkpoint its result, so the tail
+    EXECUTES under the posture (the conf is execution-time state; a lazy
+    return would run under the caller's session settings). This is
     :func:`bounded_tail` without the head checkpoint, for operators
     whose reused frame is corpus-scale and already pinned by the caller
     (an extra checkpoint copy of it would be waste at any scale; q259's
     customer×brand edge projection is the archetype).
 
-    ``n_rows`` sizes the posture width — an int, or a zero-arg callable
-    evaluated only on the eager path (so the lazy plan-sweep path never
-    pays the sizing count). ``build()`` returns ``(result_df, pins)``;
-    both its pins and the caller's ``pins`` are released on every exit
-    path (the bounded_tail hygiene). The posture is honest only when
-    the tail's aggregations are map-side partial-aggregable and its
-    join fan-outs are bounded by construction — the caller documents
-    that argument at the call site. Same localCheckpoint
-    fault-tolerance trade as bounded_tail.
+    ``n_rows`` sizes the posture width. ``build(parts)`` receives the
+    derived width (for explicit repartitions) and returns
+    ``(result_df, pins)``; both its pins and the caller's ``pins`` are
+    released on every exit path. A ``build`` that raises can only leak
+    cache-registry MARKS, never blocks — ``persist()`` is lazy and
+    nothing materializes until the result checkpoint runs the job — and
+    the checkpoint itself is wrapped so a mid-job failure unpersists
+    whatever ``build`` pinned. The posture is honest only when the
+    tail's aggregations are map-side partial-aggregable and its join
+    fan-outs are bounded by construction — the caller documents that
+    argument at the call site. Same localCheckpoint fault-tolerance
+    trade as bounded_tail.
     """
-    if not EAGER_TAILS:
-        from .plans.common import materialize_release
-
-        res, built = build()
-        return materialize_release(res, *_as_pins(built), *_as_pins(pins))
-    width = n_rows() if callable(n_rows) else n_rows
     out_pins: list = []
     try:
-        with loop_execution(spark, width):
-            res, built = build()
+        with loop_execution(spark, n_rows) as parts:
+            res, built = build(parts)
             out_pins = _as_pins(built)
-            out = res.localCheckpoint()
-    except BaseException:
-        for p in out_pins + _as_pins(pins):
-            try:
-                p.unpersist(False)
-            except Exception:
-                pass  # best-effort cleanup; the original error propagates
-        raise
-    for p in out_pins + _as_pins(pins):
-        p.unpersist(False)
-    return out
+            return res.localCheckpoint()
+    finally:
+        _release(out_pins + _as_pins(pins))
+
+
+def _release(pins: list) -> None:
+    """Unpersist every pin, best-effort: a failing release never masks
+    the error (or result) that reached this cleanup."""
+    for p in pins:
+        try:
+            p.unpersist(False)
+        except Exception:
+            pass
 
 
 def _as_pins(pins) -> list:

@@ -70,14 +70,6 @@ def materialize_release(out, *pinned):
     deferred form keeps the r5 wall-clock exactly and still bounds cache
     lifetime to one query.
     """
-    # Stash the physical plan (cache substitution visible as
-    # InMemoryRelation/InMemoryTableScan nodes) for the plan-hygiene
-    # tests. Gated behind CAPTURE_PLANS (test-only): production calls
-    # skip the stringification — it forces physical planning eagerly and
-    # mutates a module global, neither of which belongs on the hot path.
-    global LAST_MATERIALIZED_PLAN
-    if CAPTURE_PLANS:
-        LAST_MATERIALIZED_PLAN = out._jdf.queryExecution().executedPlan().toString()
     _assert_release_owner()
     flush_pending_release()
     _PENDING_RELEASE.extend(pinned)
@@ -125,16 +117,6 @@ def _assert_release_owner() -> None:
             f"{_PENDING_RELEASE_OWNER[0]} whose query may still read them. "
             "Concurrent drivers must scope pins per-thread."
         )
-
-
-#: Test-only switch: the plan-hygiene suite flips this on so
-#: materialize_release captures the pre-checkpoint physical plan.
-#: Default False — production callers pay nothing for the introspection.
-CAPTURE_PLANS: bool = False
-
-#: Physical plan (string) of the most recent materialize_release call,
-#: captured before the checkpoint collapsed it (only when CAPTURE_PLANS).
-LAST_MATERIALIZED_PLAN: str | None = None
 
 
 def dist_rank(df, order_cols, out: str = "rank", n_parts: int | None = None):

@@ -4723,7 +4723,7 @@ def q259_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange), and the join fan-out is bounded by construction — cb is
     DISTINCT (cust, brand), so no customer carries more than |brands|
     (25 in TPC-H) rows — which is exactly the case where AQE's
-    per-exchange query-stage jobs buy nothing (17 → 10 jobs measured).
+    per-exchange query-stage jobs buy nothing (17 → 12 jobs measured).
     """
     from pyspark import StorageLevel
 
@@ -4750,7 +4750,7 @@ def q259_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    def _build():
+    def _build(_parts):
         degc = cb.groupBy("cust").agg(F.count(F.lit(1)).cast(dec).alias("dc"))
         auth1 = (
             cb.join(degc, "cust")
@@ -4805,7 +4805,7 @@ def q259_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The sizing count doubles as cb's materialization action (the cache
     # fills under the session's AQE before the posture begins).
-    return posture_tail(spark, lambda: cb.count(), _build, pins=[cb])
+    return posture_tail(spark, cb.count(), _build, pins=[cb])
 
 
 Q259_SQL = f"""

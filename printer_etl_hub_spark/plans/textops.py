@@ -11128,8 +11128,7 @@ def q242_lang_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from .. import execution
-    from ..execution import loop_execution
+    from ..execution import posture_tail
 
     t = load_tables(spark, sf_dir)
     _pins: list = []
@@ -11141,15 +11140,8 @@ def q242_lang_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_id", "b_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # One cheap count over the (persisted) pair table sizes the round
-    # loop — the CC operator's discipline applied to the LPA rounds
-    # (r13 optimization): the rounds' plan shape is fixed and known
-    # (2 pinned rounds, partial-aggregable counts), so they run under
-    # the loop posture with the edge table pre-partitioned AND
-    # pre-sorted on the join key — at any scale the graph is exchanged
-    # once, not once per round.
-    ne = e.count()
-    with loop_execution(spark, 2 * ne) as loop_parts:
+
+    def _rounds(loop_parts):
         und = (
             e.select(F.col("a_id").alias("node"), F.col("b_id").alias("nbr"))
             .unionAll(e.select(F.col("b_id").alias("node"), F.col("a_id").alias("nbr")))
@@ -11192,17 +11184,17 @@ def q242_lang_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("lang0") != F.col("lang2")).alias("changed"),
             )
         )
-        # Eager path: the posture is execution-time state, so the rounds
-        # must materialize INSIDE it (node-scale slim output — the CC
-        # label-checkpoint class). Lazy path (EAGER_TAILS off): the
-        # plan-hygiene sweeps get the full lazy plan; eager≡lazy rows
-        # pinned in tests/test_execution.py.
-        out = res.localCheckpoint() if execution.EAGER_TAILS else None
-    if out is not None:
-        for p in (e, und, l0, *_pins):
-            p.unpersist(False)
-        return out
-    return materialize_release(res, e, und, l0, *_pins)
+        return res, [und, l0]
+
+    # One cheap count over the (persisted) pair table sizes the round
+    # loop — the CC operator's discipline applied to the LPA rounds
+    # (r13 optimization): the rounds' plan shape is fixed and known
+    # (2 pinned rounds, partial-aggregable counts), so they run under
+    # the loop posture with the edge table pre-partitioned AND
+    # pre-sorted on the join key — at any scale the graph is exchanged
+    # once, not once per round. The node-scale slim result is
+    # checkpointed inside the posture (the CC label-checkpoint class).
+    return posture_tail(spark, 2 * e.count(), _rounds, pins=[e, *_pins])
 
 
 Q242_SQL = f"""
@@ -11545,12 +11537,11 @@ def _pca_moment_frames(spark: SparkSession, sf_dir: str, persist_emb: bool):
 
 def _one_join(df: DataFrame, scalar_df: DataFrame) -> DataFrame:
     """Attach a 1-row frame's columns to every row of ``df`` via a
-    constant-key equi join. Relationally identical to the former
-    ``join(F.broadcast(scalar))`` cross join, but under the tail posture
-    (AQE off) it plans as a single-partition sort-merge join instead of a
-    BroadcastNestedLoopJoin — no dedicated broadcast-BUILD job, and the
-    whole tail collapses into the one result-checkpoint job (r14; the
-    BNLJ whitelist entries for q245/q254 drop to zero)."""
+    constant-key equi join. Relationally identical to a cross join with
+    the scalar frame: the optimizer folds the constant key away, so it
+    plans as a BroadcastNestedLoopJoin against the 1-row side (six of
+    them in q245's and q254's tail plans, all pinned in the BNLJ
+    whitelist)."""
     k = "_one_k"
     return df.withColumn(k, F.lit(1)).join(
         scalar_df.withColumn(k, F.lit(1)), k
@@ -11650,8 +11641,8 @@ def q245_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean pass and the count scan as SEPARATE corpus stages. Everything
     after — C (mirrored from the 2 080 aggregated cells), both power
     rounds, the Rayleigh legs — runs on d²-bounded frames under the
-    ``bounded_tail`` posture: one job for the whole tail, no broadcast
-    builds (constant-key equi joins attach the scalars). At 100 TB the
+    ``bounded_tail`` posture, the scalars attached by 1-row broadcast
+    nested-loop joins (``_one_join``). At 100 TB the
     only corpus-sized stage is the in-array expansion — the standard
     distributed Gram computation.
     """

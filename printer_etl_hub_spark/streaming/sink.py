@@ -175,11 +175,7 @@ def vacuum(state_dir: str, *, keep_last: int = 2) -> list[str]:
     history is readable until vacuumed — this is the vacuum.)"""
     import shutil
 
-    ptr = os.path.join(state_dir, _POINTER)
-    current = None
-    if os.path.exists(ptr):
-        with open(ptr, encoding="utf-8") as fh:
-            current = fh.read().strip()
+    current, _ = _read_pointer(state_dir)
     versions = sorted(
         d for d in os.listdir(state_dir) if d.startswith("v") and d[1:].isdigit()
     )

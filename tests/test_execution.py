@@ -1,16 +1,19 @@
-"""bounded_tail / loop_execution posture tests (r13 optimization).
+"""bounded_tail / posture_tail / loop_execution posture tests.
 
 The daily-series statistics family routes its index-scale tail through
 ``execution.bounded_tail``: the |days|-bounded head is checkpointed once
 (one corpus pass instead of one per tail consumer) and the tail executes
 eagerly under the loop posture (AQE off, shuffle width derived from the
-head's actual row count). The plan-hygiene suites flip ``EAGER_TAILS``
-off to keep walking the full lazy plan — so THIS module pins the
-contract that makes that sound: eager and lazy produce IDENTICAL rows
-in identical order, and the posture always restores the session confs.
+head's actual row count) via ``execution.posture_tail``, which q242 and
+q259 call directly over frames they pinned themselves. This module pins
+the posture's contract: exact rows at a second scale, ORDER BY rows
+still in order after the result checkpoint, session confs restored, and
+pins released on every exit path.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -18,14 +21,23 @@ from printer_etl_hub_spark import execution
 from printer_etl_hub_spark.plans import REGISTRY
 from printer_etl_hub_spark.plans.common import flush_pending_release
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, duck_views
+from test_oracle_diff import assert_matches_oracle
 
-#: Every registry query converted to the bounded_tail posture. Keep in
-#: sync when converting more — the equivalence sweep below runs each on
-#: both paths.
-BOUNDED_TAIL_QUERIES = [
+#: A second gate scale: the posture width and the head checkpoint are
+#: sized from row counts, so the tails run at two sizes, not one.
+SF_POSTURE = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+
+#: Every registry query that runs through bounded_tail or posture_tail.
+#: Keep in sync when converting more.
+POSTURE_QUERIES = [
+    "q242_lang_propagation",
+    "q245_pca_power",
     "q249_daily_acf",
+    "q254_pca_scores",
+    "q259_hits",
     "q289_pettitt",
+    "q292_logrank",
     "q295_ljung_box",
     "q296_binned_drift",
     "q297_durbin_watson",
@@ -34,45 +46,36 @@ BOUNDED_TAIL_QUERIES = [
     "q306_classical_decomposition",
     "q307_forecast_scorecard",
     "q310_friedman_kendall_w",
-    "q292_logrank",
+]
+
+#: Posture queries whose oracle ORDER BY keys are unique: their rows must
+#: come back in that order, through the result checkpoint.
+ORDERED_POSTURE_QUERIES = {
     "q254_pca_scores",
     "q259_hits",
-    "q234_join_cardinality",
-]
-
-#: Posture-converted queries whose declared output carries NO ORDER BY
-#: (the oracle gate sorts rows before hashing) — compared as sorted sets.
-UNORDERED_POSTURE_QUERIES = [
-    "q242_lang_propagation",
-    "q245_pca_power",
-]
+    "q295_ljung_box",
+    "q296_binned_drift",
+    "q306_classical_decomposition",
+    "q307_forecast_scorecard",
+}
 
 
-@pytest.mark.parametrize(
-    "name", BOUNDED_TAIL_QUERIES + UNORDERED_POSTURE_QUERIES
-)
-def test_bounded_tail_eager_equals_lazy(spark, name):
-    """The production (eager, posture) path must return exactly the lazy
-    path's rows — in the same order for the ORDER BY queries (stricter
-    than the gate needs), as sorted sets for the declared-unordered
-    ones."""
+@pytest.fixture(scope="module")
+def duck_posture():
+    return duck_views(SF_POSTURE)
+
+
+@pytest.mark.parametrize("name", POSTURE_QUERIES)
+def test_posture_tail_matches_oracle(spark, duck_posture, name):
+    """The posture path returns exactly the oracle's rows at SF_POSTURE
+    — in the oracle's order for the ORDER BY queries (the checkpoints
+    must preserve the computed row order)."""
     spark.catalog.clearCache()
     flush_pending_release()
-    old = execution.EAGER_TAILS
-    try:
-        execution.EAGER_TAILS = True
-        eager = [tuple(r) for r in REGISTRY[name].fn(spark, SF_SMOKE).collect()]
-        spark.catalog.clearCache()
-        flush_pending_release()
-        execution.EAGER_TAILS = False
-        lazy = [tuple(r) for r in REGISTRY[name].fn(spark, SF_SMOKE).collect()]
-    finally:
-        execution.EAGER_TAILS = old
-        spark.catalog.clearCache()
-        flush_pending_release()
-    if name in UNORDERED_POSTURE_QUERIES:
-        eager, lazy = sorted(eager), sorted(lazy)
-    assert eager == lazy, name
+    spec = REGISTRY[name]
+    got = spec.fn(spark, SF_POSTURE).toPandas()
+    want = duck_posture.execute(spec.oracle_sql).df()
+    assert_matches_oracle(name, got, want, ordered=name in ORDERED_POSTURE_QUERIES)
 
 
 def test_bounded_tail_restores_session_confs(spark):
@@ -91,28 +94,39 @@ def test_bounded_tail_restores_session_confs(spark):
 
 
 def test_bounded_tail_unpersists_pins_when_checkpoint_fails(spark):
-    """r14 (ADVICE r13): if the result checkpoint job fails AFTER the
-    build returned (the only point where pins can hold real blocks),
-    the eager path must unpersist the build's pins before re-raising —
-    previously they stayed cached for the life of the session."""
+    """If a checkpoint job fails, every pin that could hold real blocks
+    is unpersisted before the error propagates: the build's pins when
+    the RESULT checkpoint fails (after the build returned), the head's
+    pins when the HEAD checkpoint itself fails. Left cached, they would
+    live for the life of the session."""
     from pyspark.sql import functions as F
+
+    def failing(df, msg):
+        return df.select(
+            F.when(F.col("id") >= 0, F.raise_error(F.lit(msg)))
+            .otherwise(F.lit("x"))
+            .alias("boom")
+        )
 
     pin = spark.range(4).persist()
 
     def build(df):
         pin.count()  # materialize the pin's blocks, as a real tail would
-        failing = df.select(
-            F.when(F.col("id") >= 0, F.raise_error(F.lit("tail job failed")))
-            .otherwise(F.lit("x"))
-            .alias("boom")
-        )
-        return failing, [pin]
+        return failing(df, "tail job failed"), [pin]
 
     with pytest.raises(Exception, match="tail job failed"):
         execution.bounded_tail(spark, spark.range(3), build)
     assert not pin.storageLevel.useMemory and not pin.storageLevel.useDisk
     # session confs restored too (the loop_execution finally)
     assert spark.conf.get("spark.sql.adaptive.enabled", "true") != "false"
+
+    head_pin = spark.range(5).persist()
+    head_pin.count()
+    with pytest.raises(Exception, match="head job failed"):
+        execution.bounded_tail(
+            spark, failing(head_pin, "head job failed"), build, head_pins=[head_pin]
+        )
+    assert not head_pin.storageLevel.useMemory and not head_pin.storageLevel.useDisk
 
 
 def test_bounded_tail_runs_tail_under_posture(spark):

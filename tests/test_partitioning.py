@@ -8,27 +8,11 @@ assumed.
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from printer_etl_hub_spark.tables import load_tables
 
 from conftest import SF_SMOKE
-
-
-@pytest.fixture(autouse=True)
-def _lazy_tails():
-    """Walk the REAL tail plans (see tests/test_plans.py::_lazy_tails):
-    with EAGER_TAILS off, bounded_tail returns the full lazy plan so the
-    registry-wide unpartitioned-window sweep keeps seeing the genuine
-    tail shape instead of a collapsed LogicalRDD scan."""
-    from printer_etl_hub_spark import execution
-
-    old = execution.EAGER_TAILS
-    execution.EAGER_TAILS = False
-    yield
-    execution.EAGER_TAILS = old
 
 
 def test_date_partitioned_write_prunes(spark, tmp_path):
@@ -225,34 +209,6 @@ def test_q95_deciles_distributed_no_global_sort(spark):
 # over a corpus-scaled frame anywhere in the 265-query surface.
 # ---------------------------------------------------------------------------
 
-# Nodes that merely pass rows through (or reshuffle them) between a window
-# and the operator that actually determines its input's size class.
-_PASS_THROUGH = (
-    "Project",
-    "Filter",
-    "Sort",
-    "Exchange",
-    "ShuffleQueryStage",
-    "AQEShuffleRead",
-    "InputAdapter",
-    "WholeStageCodegen",
-    "ColumnarToRow",
-    "Coalesce",
-    "ReusedExchange",
-)
-# A window whose input went through any of these is head-sized by definition.
-_LIMIT_NODES = (
-    "TakeOrderedAndProject",
-    "GlobalLimit",
-    "LocalLimit",
-    "CollectLimit",
-)
-_AGG_NODES = ("HashAggregate", "ObjectHashAggregate", "SortAggregate")
-# Aggregates grouped ONLY by a physical-partition id or a fixed bucket id
-# are n_parts-/n_buckets-bounded however big the corpus is: the dist_rank /
-# q77 / q95 offset-table discipline (plans/common.py).
-_BOUNDED_KEY = ("_pid#", "pid#", "_bucket#")
-
 # Unpartitioned windows whose input frame is bounded by CONSTRUCTION, not
 # by a limit or an offset-shaped aggregate. value = (expected window count,
 # why the frame cannot scale with the corpus). Keep this list exact: a new
@@ -281,67 +237,22 @@ _BOUNDED_BY_CONSTRUCTION = {
 }
 
 
-def _children(node):
-    ch = node.children()
-    return [ch.apply(i) for i in range(ch.size())]
-
-
-def _window_input_class(node):
-    """Descend from a window's child through pass-through nodes and return
-    ('limit'|'offset_agg'|'other', node_name)."""
-    cur = node
-    while True:
-        name = cur.nodeName()
-        if any(name.startswith(p) for p in _LIMIT_NODES):
-            return "limit", name
-        if any(name.startswith(p) for p in _AGG_NODES):
-            head = cur.toString().splitlines()[0]
-            keys = head.split("keys=[", 1)[1].split("]", 1)[0] if "keys=[" in head else ""
-            cols = [k.strip() for k in keys.split(",") if k.strip()]
-            if cols and all(any(b in c for b in _BOUNDED_KEY) for c in cols):
-                return "offset_agg", name
-            return "other", name
-        kids = _children(cur)
-        if any(name.startswith(p) for p in _PASS_THROUGH) and len(kids) == 1:
-            cur = kids[0]
-            continue
-        return "other", name
-
-
-def _scan_unbounded_windows(node, hits):
-    if node.nodeName() == "Window" and node.partitionSpec().size() == 0:
-        kids = _children(node)
-        cls, nm = _window_input_class(kids[0]) if kids else ("other", "?")
-        if cls == "other":
-            hits.append(nm)
-    for k in _children(node):
-        _scan_unbounded_windows(k, hits)
-
-
-def test_registry_has_no_unpartitioned_window_over_unbounded_frame(spark):
-    """Walk the physical plan of EVERY registry query and reject any
-    window with an empty partition spec whose input is not provably
-    small: a limit head (q124/q259 TakeOrdered discipline), an
-    offset-table aggregate keyed only by a partition/bucket id
-    (dist_rank / q77 / q95), or a frame in the documented
-    bounded-by-construction whitelist above. This is the guard the r10
-    verdict asked for after q259 shipped a row_number over the
-    |customers|-sized hub frame: InferWindowGroupLimit does NOT rescue
-    empty-partition-spec windows on Spark 4.1, so any such window is a
-    single-task sort of whatever feeds it."""
-    from printer_etl_hub_spark.plans import REGISTRY
-
+def test_registry_has_no_unpartitioned_window_over_unbounded_frame(registry_plans):
+    """Walk the physical plans of EVERY registry query (conftest.py::
+    registry_plans) and reject any window with an empty partition spec
+    whose input is not provably small: a limit head (q124/q259
+    TakeOrdered discipline), an offset-table aggregate keyed only by a
+    partition/bucket id (dist_rank / q77 / q95), or a frame in the
+    documented bounded-by-construction whitelist above. This is the
+    guard the r10 verdict asked for after q259 shipped a row_number over
+    the |customers|-sized hub frame: InferWindowGroupLimit does NOT
+    rescue empty-partition-spec windows on Spark 4.1, so any such window
+    is a single-task sort of whatever feeds it."""
     offenders = {}
-    for name, spec in REGISTRY.items():
-        df = spec.fn(spark, SF_SMOKE)
-        plan = df._jdf.queryExecution().executedPlan()
-        if "Adaptive" in plan.getClass().getName():
-            plan = plan.initialPlan()
-        hits = []
-        _scan_unbounded_windows(plan, hits)
+    for name, f in registry_plans.items():
         expected = _BOUNDED_BY_CONSTRUCTION.get(name, (0, ""))[0]
-        if len(hits) != expected:
-            offenders[name] = (hits, expected)
+        if len(f["windows"]) != expected:
+            offenders[name] = (f["windows"], expected)
     assert not offenders, (
         "unpartitioned windows over non-bounded frames (got_inputs, "
         f"expected_whitelisted_count): {offenders}"

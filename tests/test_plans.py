@@ -10,50 +10,23 @@ import re
 import pytest
 
 from printer_etl_hub_spark.plans import REGISTRY
-from printer_etl_hub_spark.plans import common as _common
 
 from conftest import SF_SMOKE
-
-# The plan tripwires need materialize_release's pre-checkpoint plan;
-# production leaves the capture off (plans/common.py::CAPTURE_PLANS).
-_common.CAPTURE_PLANS = True
-
-
-@pytest.fixture(autouse=True)
-def _lazy_tails():
-    """Walk the REAL tail plans: bounded_tail (r13, the daily-series
-    statistics family) collapses its result to a LogicalRDD scan in
-    production; with EAGER_TAILS off it returns the full lazy plan, so
-    every sweep in this module (BNLJ count pins, no-Python paths,
-    pushdown checks) keeps seeing the genuine shape. Eager == lazy rows
-    is pinned by tests/test_execution.py."""
-    from printer_etl_hub_spark import execution
-
-    old = execution.EAGER_TAILS
-    execution.EAGER_TAILS = False
-    yield
-    execution.EAGER_TAILS = old
-
 
 def plan_of(spark, name: str, mode: str = "formatted") -> str:
     # "formatted" for readable sections (PushedFilters/ReadSchema);
     # "simple" for NODE COUNTING — formatted prints every node twice
     # (tree line + detail section).
-    #
-    # Queries that route through plans/common.py::materialize_release
-    # return a checkpoint scan whose own plan is opaque; for those, the
-    # helper stashed the real pre-checkpoint physical plan — inspect
-    # THAT, so the plan tripwires (BNLJ sweep, no-Python sweep) stay
-    # live for exactly the persisting queries.
-    from printer_etl_hub_spark.plans import common
-
-    common.LAST_MATERIALIZED_PLAN = None
     df = REGISTRY[name].fn(spark, SF_SMOKE)
-    if common.LAST_MATERIALIZED_PLAN is not None:
-        return common.LAST_MATERIALIZED_PLAN
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     )
+
+
+def executed_plan(df) -> str:
+    """The physical plan of a returned frame, cache substitutions
+    (InMemoryRelation/InMemoryTableScan nodes) included."""
+    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_q01_filter_pushdown(spark):
@@ -85,17 +58,26 @@ def test_q12_point_lookup_prunes(spark):
     assert "Exchange" not in plan, plan[:2000]
 
 
-def test_relational_paths_have_no_python(spark):
+#: Python stages allowed in a query's plans. Two queries are Python by
+#: design: q33 (multimodal decode kernels) and q83 (the S10 Brother HTML
+#: parse — a per-page string parser, the reference's scrape adapter).
+_PYTHON_QUERIES = {"q33_multimodal_decode", "q83_brother_toner"}
+#: Connected components' partition-local union-find seed
+#: (operators/components.py::_local_uf): one narrow mapInPandas over the
+#: edge blocks, allowed in every query that composes CC.
+_PYTHON_NODES = ("MapInPandas _local_uf(",)
+
+
+def test_relational_paths_have_no_python(registry_plans):
     """Every relational query must stay JVM-side — no BatchEvalPython /
-    ArrowEvalPython / mapInPandas stages. Sanctioned Python-stage queries:
-    q33 (multimodal decode kernels) and q83 (the S10 Brother HTML parse —
-    a per-page string parser, the reference's scrape adapter)."""
-    sanctioned = {"q33_multimodal_decode", "q83_brother_toner"}
-    for name in REGISTRY:
-        if name in sanctioned:
-            continue
-        plan = plan_of(spark, name)
-        assert "EvalPython" not in plan and "MapInPandas" not in plan, name
+    ArrowEvalPython / mapInPandas stages in the plans it runs, apart from
+    the sanctioned queries and nodes above."""
+    bad = {}
+    for name, f in registry_plans.items():
+        nodes = [n for n in f["python"] if not any(ok in n for ok in _PYTHON_NODES)]
+        if nodes and name not in _PYTHON_QUERIES:
+            bad[name] = nodes
+    assert not bad, bad
 
 
 def test_q01_wholestage_codegen(spark):
@@ -173,16 +155,10 @@ def test_q62_q67_fact_scanned_once(spark):
     the fact aggregation. (A cached relation prints its child plan, so
     counting 'lineitem.parquet' in the text overcounts — assert the cache
     substitution itself.)"""
-    from printer_etl_hub_spark.plans import common
-
     for name in ("q62_tpch_q15", "q67_tpch_q11"):
         spark.catalog.clearCache()
-        common.LAST_MATERIALIZED_PLAN = None
-        REGISTRY[name].fn(spark, SF_SMOKE)
-        # the query materializes + releases its cache on return; the
-        # pre-checkpoint plan (cache substitution visible) was stashed
-        executed = common.LAST_MATERIALIZED_PLAN
-        assert executed is not None and executed.count("InMemoryTableScan") >= 2, name
+        executed = executed_plan(REGISTRY[name].fn(spark, SF_SMOKE))
+        assert executed.count("InMemoryTableScan") >= 2, name
 
 
 def test_q80_windows_share_one_exchange(spark):
@@ -225,10 +201,11 @@ def test_q116_single_corpus_pass_via_exchange_reuse(spark):
 #: q38 broadcast-scores centroids (O(n·c) map stage), q65/q67 are TPC-H
 #: scalar-subquery 1-row broadcasts.
 #:
-#: value = the EXACT BNLJ node count in the query's physical plan at
-#: SF_SMOKE (VERDICT r11 #4): the old name-level whitelist let an
-#: already-whitelisted query grow a SECOND, unintended nested loop
-#: undetected. A count change — either direction — now fails the sweep
+#: value = the EXACT BNLJ node count in the query's physical plans at
+#: SF_SMOKE — the returned frame's plus every checkpointed frame's, as
+#: conftest.py::registry_plans collects them (VERDICT r11 #4): the old
+#: name-level whitelist let an already-whitelisted query grow a SECOND,
+#: unintended nested loop undetected. A count change — either direction — now fails the sweep
 #: and must be re-justified here. Zero-count entries are queries whose
 #: historically-whitelisted scalar cross join has since been optimized
 #: away (q100, q226): they stay pinned at 0 so a regression shows.
@@ -280,24 +257,27 @@ BNLJ_ALLOWED = {
     "q238_cell_purity": 1,  # 16-row broadcast centroid table (q164's class)
     "q240_kcore": 2,  # 1-row convergence-flag scalar broadcast (q89's class)
     "q241_brand_affinity": 1,  # 1-row n_cust scalar broadcast (q89's class)
-    # 7 -> 1 at r14: the per-round scalar attaches (n / norm) became
-    # constant-key equi joins under the bounded_tail posture; the one
-    # remaining BNLJ is the final 1-row Rayleigh-lambda attach onto the
-    # d-row loadings frame (q89's bounded scalar class; was 103 before
-    # round 12's per-round localCheckpoint lineage collapse).
-    "q245_pca_power": 1,
+    # Every 1-row scalar attach of the d^2-bounded spectral tail
+    # (textops.py::_one_join: the optimizer folds its constant key away,
+    # so it plans as a keyless BNLJ): n onto mu and onto C (mu read
+    # twice), each round's norm, and the final Rayleigh lambda — all in
+    # the tail's checkpointed plans (q89's bounded scalar class).
+    "q245_pca_power": 6,
     "q248_hybrid_fusion": 2,  # 1-row pinned-query-vector broadcast + composes q104
     "q251_markov_stationary": 2,  # 1-row |types| scalar broadcast (q89's class)
     "q252_seasonality_strength": 1,  # 1-row between-groups scalar broadcast
     "q253_histogram_quantiles": 2,  # 1-row (min,max,n) range scalar broadcast
-    # q254 composes q245's spectral tail: the same final 1-row
-    # Rayleigh-lambda scalar attach (q89's bounded class) survives.
-    "q254_pca_scores": 1,
+    # q254 composes q245's spectral tail: the same n / norm attaches,
+    # plus n onto mu once more for the (v, mu) table instead of lambda.
+    "q254_pca_scores": 6,
     "q256_chi2_keyness": 1,  # 1-row grand-total scalar broadcast (q127's class)
     "q260_theil_sen": 3,  # 1-row slope / n_pairs / n_days scalar broadcasts
     "q261_rrf_fusion": 2,  # composes q248's 1-row pinned-query-vector broadcast
     "q262_benford_audit": 1,  # 1-row N scalar broadcast (q89's class)
-    "q263_markov_attribution": 3,  # chain x state grid builds (|channels|+1-row broadcasts); 11 -> 3 at r13: the trans/astart localCheckpoints collapsed the repeated grid subtrees to LogicalRDD reads
+    # chain x state grid builds (|channels|+1-row broadcasts): 3 in the
+    # returned plan, 2 in the per-chain solve input (rbase / q_ch grids)
+    # behind the astart checkpoint in operators/attribution.py.
+    "q263_markov_attribution": 5,
     "q264_lorenz_curve": 1,  # 1-row (n, sx) totals scalar broadcast (q226's class)
     "q265_winsorized_moments": 3,  # 1-row n + 1-row thresholds scalar broadcasts
     "q266_mannwhitney_u": 1,  # 1-row (n, tie-term) totals scalar broadcast
@@ -316,13 +296,13 @@ BNLJ_ALLOWED = {
     "q289_pettitt": 3,  # 1-row n_days scalar broadcasts x3 (q89's class)
     "q290_cuped": 1,  # 1-row midpoint-day scalar broadcast (q89's class)
     "q291_mcnemar": 1,  # 1-row midpoint-day scalar broadcast (q89's class)
-    "q292_logrank": 6,  # 1-row max-day + arm-totals scalar broadcasts (q89's class)
+    "q292_logrank": 3,  # 1-row max-day (head) + two arm-totals (tail) scalar broadcasts
     "q293_cliffs_delta": 1,  # 1-row (n, tie-term) totals scalar broadcast (q266's class)
-    "q295_ljung_box": 11,  # 1-row n/S/den scalar broadcasts + the <=7-row lag-frame triangular broadcast join
-    "q296_binned_drift": 7,  # 1-row split/min-max + 1-row totals + 1-row term-total scalar broadcasts
+    "q295_ljung_box": 9,  # 1-row n/S/den scalar broadcasts + the <=7-row lag-frame triangular broadcast join
+    "q296_binned_drift": 4,  # 1-row split/min-max (head) + totals + term-total (tail) scalar broadcasts
     "q297_durbin_watson": 4,  # 1-row sufficient-statistic + DW-numerator scalar broadcasts (q89's class)
     "q298_silhouette": 1,  # 1-row overall-mean scalar broadcast (q89's class)
-    "q299_runs_test": 4,  # 1-row totals/median scalar broadcasts (q89's class)
+    "q299_runs_test": 3,  # 1-row median attach, once per cached run frame (q89's class)
     "q300_anova_f": 1,  # 1-row grand-total scalar broadcast (q89's class)
     "q301_curriculum_phases": 1,  # 1-row token-budget scalar broadcast (q89's class)
     "q303_mantel_haenszel": 1,  # 1-row pooled-terms scalar broadcast (q89's class)
@@ -336,7 +316,7 @@ BNLJ_ALLOWED = {
 }
 
 
-def test_no_unintended_nested_loop_joins(spark):
+def test_no_unintended_nested_loop_joins(registry_plans):
     """Plan-hygiene sweep over the whole registry: no CartesianProduct
     anywhere, and BroadcastNestedLoopJoin only where the build side is
     provably tiny (whitelist above) — at EXACTLY the documented node
@@ -344,14 +324,13 @@ def test_no_unintended_nested_loop_joins(spark):
     too (VERDICT r11 #4). A join key typo or a lost equi-key silently
     degrades to a nested loop — the classic 100-TB outage — and this
     test is the tripwire."""
-    bad = {}
-    for name in REGISTRY:
-        plan = plan_of(spark, name, "simple")
-        assert "CartesianProduct" not in plan, name
-        got = plan.count("BroadcastNestedLoopJoin")
-        expected = BNLJ_ALLOWED.get(name, 0)
-        if got != expected:
-            bad[name] = (got, expected)
+    cartesian = [name for name, f in registry_plans.items() if f["cartesian"]]
+    assert not cartesian, cartesian
+    bad = {
+        name: (f["bnlj"], BNLJ_ALLOWED.get(name, 0))
+        for name, f in registry_plans.items()
+        if f["bnlj"] != BNLJ_ALLOWED.get(name, 0)
+    }
     assert not bad, f"BNLJ count drift (got, whitelisted): {bad}"
 
 
@@ -402,13 +381,9 @@ def test_q90_bloom_probe_is_broadcast_and_single_gram_build(spark):
     train corpus reaches the probe stage as a ≤128 KiB bitmap, never a
     gram table), and the persisted gram build must serve both branches
     (InMemoryTableScan on each, not a re-tokenize)."""
-    from printer_etl_hub_spark.plans import common
-
     spark.catalog.clearCache()
-    common.LAST_MATERIALIZED_PLAN = None
-    REGISTRY["q90_bloom_decontam"].fn(spark, SF_SMOKE)
-    executed = common.LAST_MATERIALIZED_PLAN
-    assert executed is not None and "BroadcastHashJoin" in executed
+    executed = executed_plan(REGISTRY["q90_bloom_decontam"].fn(spark, SF_SMOKE))
+    assert "BroadcastHashJoin" in executed
     assert executed.count("InMemoryTableScan") >= 2, executed[:2000]
 
 
@@ -416,13 +391,9 @@ def test_q92_tf_built_once(spark):
     """tf feeds both the df derivation and the term-join probe side; the
     persist must make both read the cache instead of re-running the
     scan+tokenize+groupBy subtree."""
-    from printer_etl_hub_spark.plans import common
-
     spark.catalog.clearCache()
-    common.LAST_MATERIALIZED_PLAN = None
-    REGISTRY["q92_tfidf_topk"].fn(spark, SF_SMOKE)
-    executed = common.LAST_MATERIALIZED_PLAN
-    assert executed is not None and executed.count("InMemoryTableScan") >= 2, executed[:2000]
+    executed = executed_plan(REGISTRY["q92_tfidf_topk"].fn(spark, SF_SMOKE))
+    assert executed.count("InMemoryTableScan") >= 2, executed[:2000]
 
 
 def test_q91_segment_dedup_no_global_sort(spark):
@@ -573,15 +544,9 @@ def test_q190_kn_scores_computed_once(spark):
     BOTH read the persisted score table (InMemoryTableScan on each),
     never a recomputed lineage — the q151 lesson applied to a composed
     query."""
-    from printer_etl_hub_spark.plans import common
-
     spark.catalog.clearCache()
-    common.LAST_MATERIALIZED_PLAN = None
-    REGISTRY["q190_kn_band_routing"].fn(spark, SF_SMOKE)
-    executed = common.LAST_MATERIALIZED_PLAN
-    assert executed is not None and executed.count("InMemoryTableScan") >= 2, (
-        executed[:2000] if executed else executed
-    )
+    executed = executed_plan(REGISTRY["q190_kn_band_routing"].fn(spark, SF_SMOKE))
+    assert executed.count("InMemoryTableScan") >= 2, executed[:2000]
 
 
 def test_q196_sweep_single_assignment_and_scoring(spark):

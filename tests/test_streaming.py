@@ -451,6 +451,30 @@ def test_vacuum_keeps_current_and_recent(spark, events, tmp_path):
     assert read_state(spark, state).count() > 0
 
 
+def test_vacuum_never_drops_committed_version(spark, events, tmp_path):
+    """The committed version survives every sweep, also when it is not
+    among the newest ``keep_last`` directories: a merge commit writes a
+    two-line pointer (version, batch id), and the sweep must read the
+    version from it, not the whole file."""
+    import os
+
+    from printer_etl_hub_spark.streaming.sink import merge_last_state, read_state, vacuum
+
+    state = str(tmp_path / "vac_committed")
+    os.makedirs(state)
+    base = events.filter(F.col("user_id") < 10).select("user_id", "ts", "event_type")
+    merge_last_state(spark, base, state, "user_id", "ts", 0)
+    (committed,) = [d for d in os.listdir(state) if d.startswith("v")]
+    n = read_state(spark, state).count()
+    # a newer version directory left behind by a commit that never
+    # flipped the pointer
+    os.makedirs(os.path.join(state, f"v{int(committed[1:]) + 1:010d}"))
+    vacuum(state, keep_last=1)
+    vacuum(state, keep_last=0)
+    assert committed in os.listdir(state)
+    assert read_state(spark, state).count() == n
+
+
 def test_merge_last_state_replay_is_idempotent(spark, events, tmp_path):
     """foreachBatch re-delivers the last batch after a restart: replaying
     the same batch_id must leave state AND version history unchanged, and
