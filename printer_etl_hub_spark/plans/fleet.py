@@ -7,13 +7,16 @@ triage → enrichment joins → the Excel-report projection (`extract_info`,
 per-color toner %, error, toner type.
 
 Everything is one lazy DataFrame plan — the reference's six sequential
-subprocess steps (each re-reading printers.json) collapse into a single
-Catalyst-optimized job.
+subprocess steps (each re-reading printers.json) collapse into one
+Catalyst-optimized plan. Executed, it is a few AQE query-stage jobs, not
+one: a steady benchmark poll cycle (this report merged into the versioned
+state table, `streaming/sink.py`) runs 12 Spark jobs, 4 of them the
+schema inference of its four input reads.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.normalize import (
@@ -203,41 +206,30 @@ def fleet_toner_report(
 
     j = base.join(carts, "ip", "left").join(errors, "ip", "left")
 
-    # A7 first-match-per-color: explode cartridges in array order, keep the
-    # first percent per normalized color slot.
-    exploded = j.select(
-        "group",
-        "ID",
-        "ip",
-        "bad_ip",
-        F.col("Type"),
-        F.posexplode_outer("cartridges").alias("pos", "cart"),
-    ).select(
-        "group",
-        "ID",
-        "ip",
-        "bad_ip",
-        "Type",
-        "pos",
-        normalize_color(F.col("cart.cartridge")).alias("color"),
-        F.col("cart.remaining_percent").alias("pct"),
+    # A7 first-match-per-color, per row: normalize each cartridge's color
+    # once, then each slot takes the first cartridge of its color in array
+    # order. A null ID reports no colors.
+    colored = F.when(
+        F.col("ID").isNotNull(),
+        F.transform(
+            "cartridges",
+            lambda c: F.struct(
+                normalize_color(c["cartridge"]).alias("color"),
+                c["remaining_percent"].alias("pct"),
+            ),
+        ),
     )
-    w = Window.partitionBy("ID", "color").orderBy("pos")
-    firsts = (
-        exploded.filter(F.col("color").isNotNull())
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .groupBy("ID")
-        .pivot("color", ["Black", "Cyan", "Magenta", "Yellow"])
-        .agg(F.first("pct", ignorenulls=True))
-    )
+
+    def first_pct(slot: str):
+        # try_element_at: ANSI mode raises on indexing an empty array
+        hits = F.filter("_colored", lambda c: c["color"] == slot)
+        return F.try_element_at(hits, F.lit(1))["pct"]
 
     status = F.when(F.col("bad_ip") | F.col("cartridges").isNull(), "offline").otherwise(
         "online"
     )
-    out = (
-        j.join(firsts, "ID", "left")
-        .withColumn("status", status_online_offline(status))
+    out = j.withColumn("status", status_online_offline(status)).withColumn(
+        "_colored", colored
     )
     if toner_types is not None:
         out = out.join(toner_types, "Type", "left")
@@ -249,10 +241,10 @@ def fleet_toner_report(
         canonicalize_id(F.col("ID")).alias("id"),
         dash_if_blank(F.col("ip")).alias("ip"),
         "status",
-        dash_if_blank(F.col("Black")).alias("black_pct"),
-        dash_if_blank(F.col("Cyan")).alias("cyan_pct"),
-        dash_if_blank(F.col("Magenta")).alias("magenta_pct"),
-        dash_if_blank(F.col("Yellow")).alias("yellow_pct"),
+        dash_if_blank(first_pct("Black")).alias("black_pct"),
+        dash_if_blank(first_pct("Cyan")).alias("cyan_pct"),
+        dash_if_blank(first_pct("Magenta")).alias("magenta_pct"),
+        dash_if_blank(first_pct("Yellow")).alias("yellow_pct"),
         dash_if_blank(F.col("problem")).alias("problem"),
         dash_if_blank(F.col("severity")).alias("severity"),
         dash_if_blank(tt).alias("toner_type"),

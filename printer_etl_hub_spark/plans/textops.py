@@ -11535,19 +11535,6 @@ def _pca_moment_frames(spark: SparkSession, sf_dir: str, persist_emb: bool):
     return emb, head, pins
 
 
-def _one_join(df: DataFrame, scalar_df: DataFrame) -> DataFrame:
-    """Attach a 1-row frame's columns to every row of ``df`` via a
-    constant-key equi join. Relationally identical to a cross join with
-    the scalar frame: the optimizer folds the constant key away, so it
-    plans as a BroadcastNestedLoopJoin against the 1-row side (six of
-    them in q245's and q254's tail plans, all pinned in the BNLJ
-    whitelist)."""
-    k = "_one_k"
-    return df.withColumn(k, F.lit(1)).join(
-        scalar_df.withColumn(k, F.lit(1)), k
-    ).drop(k)
-
-
 def _pca_tail_frames(h: DataFrame):
     """q245/q254's spectral tail over the checkpointed moment head: n,
     mu, the symmetrized covariance C, and the 2-round power iterate v —
@@ -11558,12 +11545,12 @@ def _pca_tail_frames(h: DataFrame):
     n = h.filter((F.col("aa") == -1) & (F.col("bb") == -1)).select(
         F.col("s_ab").cast("bigint").alias("_n")
     )
-    mu = _one_join(
-        h.filter((F.col("bb") == -1) & (F.col("aa") >= 0)).select(
-            F.col("aa").alias("a"), F.col("s_ab").alias("_sx")
-        ),
-        n,
-    ).select("a", (F.col("_sx") / F.col("_n").cast("double")).alias("mu"))
+    mu = (
+        h.filter((F.col("bb") == -1) & (F.col("aa") >= 0))
+        .select(F.col("aa").alias("a"), F.col("s_ab").alias("_sx"))
+        .crossJoin(n)
+        .select("a", (F.col("_sx") / F.col("_n").cast("double")).alias("mu"))
+    )
     s_up = h.filter((F.col("aa") >= 0) & (F.col("bb") >= 0)).select(
         "aa", "bb", "s_ab"
     )
@@ -11573,7 +11560,7 @@ def _pca_tail_frames(h: DataFrame):
         )
     )
     c = (
-        _one_join(s, n)
+        s.crossJoin(n)
         .join(mu.select(F.col("a").alias("aa"), F.col("mu").alias("mu_a")), "aa")
         .join(mu.select(F.col("a").alias("bb"), F.col("mu").alias("mu_b")), "bb")
         .select(
@@ -11607,7 +11594,7 @@ def _pca_tail_frames(h: DataFrame):
         # NULLIF: a zero-variance corpus makes C·v the zero vector —
         # loadings NULL identically in both engines, never an ANSI
         # divide-by-zero (review r9)
-        v = _one_join(w, nrm).select(
+        v = w.crossJoin(nrm).select(
             F.col("aa").alias("b"),
             (F.col("w") / F.nullif(F.col("_nrm"), F.lit(0.0))).alias("v"),
         ).localCheckpoint(eager=False)
@@ -11642,7 +11629,7 @@ def q245_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     after — C (mirrored from the 2 080 aggregated cells), both power
     rounds, the Rayleigh legs — runs on d²-bounded frames under the
     ``bounded_tail`` posture, the scalars attached by 1-row broadcast
-    nested-loop joins (``_one_join``). At 100 TB the
+    nested-loop joins (``crossJoin``). At 100 TB the
     only corpus-sized stage is the in-array expansion — the standard
     distributed Gram computation.
     """
@@ -11663,7 +11650,7 @@ def q245_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             w3.join(v, w3["aa"] == v["b"])
             .agg(_dsum18(F.col("w3") * F.col("v")).alias("_lam"))
         )
-        res = _one_join(v, lam).select(
+        res = v.crossJoin(lam).select(
             F.col("b").cast("bigint").alias("dim"),
             F.round(F.col("v"), 6).alias("loading"),
             F.round(F.col("_lam"), 6).alias("lam"),

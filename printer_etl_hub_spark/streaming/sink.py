@@ -7,46 +7,55 @@ Spark-shaped equivalent is a keyed state table upserted per micro-batch via
 state, write a NEW version directory, then flip a pointer file — the same
 atomic-commit idea, but versioned (time-travel for free) and distributed.
 
-On a Delta/Iceberg-equipped cluster ``_merge_batch`` becomes a one-line
-``MERGE INTO``; the plan shape (latest-per-key reduce + key-equi outer
-merge) is identical. Parquet-dir versioning keeps this container-runnable.
+On a Delta/Iceberg-equipped cluster ``merge_last_state`` becomes a one-line
+``MERGE INTO``; its plan shape (one key shuffle that keeps the latest row
+per key) is the same. Parquet-dir versioning keeps this container-runnable.
 
-Scale notes: state size is O(|keys|); the merge shuffles only on the key;
-the batch side is reduced to one row per key BEFORE touching the (large)
-state table.
+Scale notes: state size is O(|keys|); the merge is ONE keyed aggregation
+over state ∪ batch, so it shuffles once, on the key. The batch is still
+reduced to one row per key before that shuffle, by the aggregation's
+map-side partial ``max_by``, not by a separate pass.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _POINTER = "_CURRENT"
 
 
-def _read_pointer(state_dir: str) -> tuple[str | None, int | None]:
-    """Committed (version, last-applied batch id). The second line of the
-    pointer file records which micro-batch produced the version — the
-    replay-detection token; absent (older pointers, delete_keys commits)
-    → None."""
+def _read_pointer(state_dir: str) -> tuple[str | None, int | None, str | None]:
+    """Committed (version, last-applied batch id, schema JSON). The second
+    line records which micro-batch produced the version — the
+    replay-detection token; blank for delete_keys commits and absent from
+    older pointers → None. The third line is the version's schema, so a
+    read need not infer it; absent from older pointers → None."""
     ptr = os.path.join(state_dir, _POINTER)
     if not os.path.exists(ptr):
-        return None, None
+        return None, None, None
     with open(ptr, encoding="utf-8") as fh:
         lines = fh.read().strip().splitlines()
     version = lines[0].strip() if lines else None
     batch_id = int(lines[1]) if len(lines) > 1 and lines[1].strip().isdigit() else None
-    return version or None, batch_id
+    schema = lines[2].strip() if len(lines) > 2 else None
+    return version or None, batch_id, schema or None
 
 
 def read_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
-    """Read the current committed state version (None before first commit)."""
-    version, _ = _read_pointer(state_dir)
+    """Read the current committed state version (None before first commit).
+    With the schema the pointer carries, no Spark job runs to infer it."""
+    version, _, schema = _read_pointer(state_dir)
     if version is None:
         return None
-    return spark.read.parquet(os.path.join(state_dir, version))
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(schema)))
+    return reader.parquet(os.path.join(state_dir, version))
 
 
 def _next_version(state_dir: str) -> str:
@@ -59,13 +68,17 @@ def _next_version(state_dir: str) -> str:
     return f"v{nxt:010d}"
 
 
-def _commit_pointer(state_dir: str, version: str, batch_id: int | None = None) -> None:
-    """Atomic pointer flip (tmp + rename), mirroring the reference's commit."""
+def _commit(df: DataFrame, state_dir: str, batch_id: int | None) -> None:
+    """Write ``df`` as a new version, then flip the pointer to it with the
+    batch id and the schema in one atomic rename (tmp + rename, mirroring
+    the reference's commit)."""
+    version = _next_version(state_dir)
+    df.write.mode("overwrite").parquet(os.path.join(state_dir, version))
     ptr = os.path.join(state_dir, _POINTER)
     tmp = ptr + ".tmp"
-    body = version if batch_id is None else f"{version}\n{batch_id}"
+    bid = "" if batch_id is None else str(batch_id)
     with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(body)
+        fh.write(f"{version}\n{bid}\n{df.schema.json()}")
     os.replace(tmp, ptr)
 
 
@@ -87,27 +100,17 @@ def merge_last_state(
     directory — never a read-and-overwrite of the one it is reading.
     """
     os.makedirs(state_dir, exist_ok=True)
-    _, last_bid = _read_pointer(state_dir)
+    _, last_bid, _ = _read_pointer(state_dir)
     if last_bid is not None and last_bid == batch_id:
         return  # this batch's effect is already committed — replay no-op
-    latest = (
-        batch_df.groupBy(key)
+    prev = read_state(spark, state_dir)
+    rows = batch_df if prev is None else prev.unionByName(batch_df)
+    merged = (
+        rows.groupBy(key)
         .agg(F.max_by(F.struct("*"), F.col(ts_col)).alias("_r"))
         .select("_r.*")
     )
-    prev = read_state(spark, state_dir)
-    if prev is not None:
-        merged = (
-            prev.unionByName(latest)
-            .groupBy(key)
-            .agg(F.max_by(F.struct("*"), F.col(ts_col)).alias("_r"))
-            .select("_r.*")
-        )
-    else:
-        merged = latest
-    version = _next_version(state_dir)
-    merged.write.mode("overwrite").parquet(os.path.join(state_dir, version))
-    _commit_pointer(state_dir, version, batch_id)
+    _commit(merged, state_dir, batch_id)
 
 
 def device_state_sink(
@@ -158,13 +161,11 @@ def delete_keys(
     kept = cur.join(keyed, key, "left_anti")
     n_before = cur.count()
     n_after = kept.count()
-    version = _next_version(state_dir)
-    kept.write.mode("overwrite").parquet(os.path.join(state_dir, version))
     # Carry the last-applied batch id forward: dropping it would disarm the
     # replay guard, and a crash-replay of that batch would re-merge rows —
     # resurrecting the keys this call just erased.
-    _, last_bid = _read_pointer(state_dir)
-    _commit_pointer(state_dir, version, last_bid)
+    _, last_bid, _ = _read_pointer(state_dir)
+    _commit(kept, state_dir, last_bid)
     return n_before - n_after
 
 
@@ -175,7 +176,7 @@ def vacuum(state_dir: str, *, keep_last: int = 2) -> list[str]:
     history is readable until vacuumed — this is the vacuum.)"""
     import shutil
 
-    current, _ = _read_pointer(state_dir)
+    current, _, _ = _read_pointer(state_dir)
     versions = sorted(
         d for d in os.listdir(state_dir) if d.startswith("v") and d[1:].isdigit()
     )

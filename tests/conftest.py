@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 import pytest
@@ -31,6 +32,20 @@ def duck_views(sf_dir: str):
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     return con
+
+
+def count_jobs(spark, group: str, fn):
+    """Run ``fn`` in its own job group; return its result and the number of
+    Spark jobs it launched, read from the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the tracker is fed by the listener bus asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")
@@ -112,6 +127,14 @@ def _scan_unbounded_windows(node, hits):
         _scan_unbounded_windows(k, hits)
 
 
+#: Every Python execution node of the physical plan: Batch/Arrow
+#: EvalPython(UDTF), (FlatMap)(Co)Groups/Map In Pandas/Arrow, and the
+#: pandas-UDF aggregate and window nodes.
+_PYTHON_EXEC = re.compile(
+    r"InPandas|InArrow|EvalPython|PythonUDTF|ArrowAggregatePython|ArrowWindowPython"
+)
+
+
 def _plan_facts(plans):
     """What the plan-shape checks assert on, over one query's physical
     plans: Python-evaluation node lines, BNLJ and Cartesian node counts,
@@ -123,11 +146,7 @@ def _plan_facts(plans):
             plan = plan.initialPlan()
         _scan_unbounded_windows(plan, windows)
     return {
-        "python": [
-            ln.strip()
-            for ln in text.splitlines()
-            if "EvalPython" in ln or "MapInPandas" in ln
-        ],
+        "python": [ln.strip() for ln in text.splitlines() if _PYTHON_EXEC.search(ln)],
         "bnlj": text.count("BroadcastNestedLoopJoin"),
         "cartesian": text.count("CartesianProduct"),
         "windows": windows,

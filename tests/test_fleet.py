@@ -342,3 +342,95 @@ def test_brother_scrape_feeds_fleet_report(spark):
     r2 = rep["1002"]  # page without a level table: online, no readings
     assert (r2["status"], r2["black_pct"]) == ("online", "-")
     assert rep["1003"]["status"] == "offline"
+
+
+def test_fleet_report_color_fold_is_per_row(spark):
+    """A7 first-match-per-color folds each printer row's own cartridges:
+    a repeated color keeps its first reading; an empty or null cartridge
+    list and a null ID report '-'; two rows sharing a raw ID keep their
+    own colors, as the reference's per-record ``extract_info`` does."""
+    printers = spark.createDataFrame(
+        [
+            ("G", "1", "10.0.0.1", "T"),
+            ("G", "2", "10.0.0.2", "T"),
+            ("G", "3", "10.0.0.3", "T"),
+            ("G", None, "10.0.0.4", "T"),
+            ("G", "7", "10.0.0.5", "T"),
+            ("G", "7.0", "10.0.0.6", "T"),  # same canonical ID, other raw ID
+            ("G", "7", "10.0.0.7", "T"),  # same raw ID as 10.0.0.5
+        ],
+        "group string, ID string, `Printer IP` string, Type string",
+    )
+    carts = spark.createDataFrame(
+        [
+            ("10.0.0.1", [("Black", "10%"), ("Cyan", "20%"), ("bk", "99%")]),
+            ("10.0.0.2", []),
+            ("10.0.0.3", None),
+            ("10.0.0.4", [("Black", "40%")]),
+            ("10.0.0.5", [("Black", "50%"), ("Yellow", "55%")]),
+            ("10.0.0.6", [("Magenta", "60%")]),
+            ("10.0.0.7", [("y", "70%"), ("k", None), ("Black", "71%")]),
+        ],
+        "ip string, cartridges array<struct<cartridge:string,remaining_percent:string>>",
+    )
+    none = spark.createDataFrame([], "ip string, row_idx int, severity int, description string")
+    walk = spark.createDataFrame([], "ip string, oid string, value string")
+    rep = {
+        r["ip"]: (r["status"], r["black_pct"], r["cyan_pct"], r["magenta_pct"], r["yellow_pct"])
+        for r in fleet_toner_report(printers, walk, none, cartridges=carts).collect()
+    }
+    assert rep == {
+        "10.0.0.1": ("online", "10%", "20%", "-", "-"),  # repeated Black: first wins
+        "10.0.0.2": ("online", "-", "-", "-", "-"),  # empty list
+        "10.0.0.3": ("offline", "-", "-", "-", "-"),  # null list
+        "10.0.0.4": ("online", "-", "-", "-", "-"),  # null ID
+        "10.0.0.5": ("online", "50%", "-", "-", "55%"),
+        "10.0.0.6": ("online", "-", "-", "60%", "-"),
+        # the first Black reading is null: it still wins over the later 71%
+        "10.0.0.7": ("online", "-", "-", "-", "70%"),
+    }
+
+
+def test_fleet_cycle_job_count(spark, tmp_path):
+    """One steady poll cycle — the report over already-read inputs, merged
+    into committed state — runs at most 8 Spark jobs: its AQE query stages
+    plus the state write. Job counts do not depend on the host."""
+    from conftest import count_jobs
+
+    from printer_etl_hub_spark.streaming.sink import merge_last_state
+
+    spark.createDataFrame(
+        [
+            ("Company_Grouped", "1001", "10.0.0.1", "M402dn"),
+            ("Company_Grouped", "1002", "0.0.0.0", "M402dn"),
+            ("Branches_Grouped", "101", "10.1.0.1", "E60055"),
+        ],
+        "group string, ID string, `Printer IP` string, Type string",
+    ).write.parquet(str(tmp_path / "printers"))
+    spark.createDataFrame(
+        _walk_rows("10.0.0.1", 1, 3, "Black", 19, 0, 60)
+        + _walk_rows("10.1.0.1", 1, 3, "Magenta", 19, 0, 12),
+        "ip string, oid string, value string",
+    ).write.parquet(str(tmp_path / "walk"))
+    spark.createDataFrame(
+        [("10.1.0.1", 1, 4, "Door open")],
+        "ip string, row_idx int, severity int, description string",
+    ).write.parquet(str(tmp_path / "alerts"))
+    spark.createDataFrame(
+        [("M402dn", ["CF226A"])], "Type string, tonerType array<string>"
+    ).write.parquet(str(tmp_path / "types"))
+    state = str(tmp_path / "state")
+
+    def cycle(c):
+        inputs = [
+            spark.read.parquet(str(tmp_path / n)) for n in ("printers", "walk", "alerts", "types")
+        ]
+
+        def run():
+            report = fleet_toner_report(*inputs).withColumn("cycle", F.lit(c))
+            merge_last_state(spark, report, state, "id", "cycle", c)
+
+        return count_jobs(spark, f"fleet_cycle_{c}", run)[1]
+
+    cycle(0)
+    assert cycle(1) <= 8

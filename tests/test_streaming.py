@@ -454,8 +454,8 @@ def test_vacuum_keeps_current_and_recent(spark, events, tmp_path):
 def test_vacuum_never_drops_committed_version(spark, events, tmp_path):
     """The committed version survives every sweep, also when it is not
     among the newest ``keep_last`` directories: a merge commit writes a
-    two-line pointer (version, batch id), and the sweep must read the
-    version from it, not the whole file."""
+    multi-line pointer (version, batch id, schema), and the sweep must
+    read the version from it, not the whole file."""
     import os
 
     from printer_etl_hub_spark.streaming.sink import merge_last_state, read_state, vacuum
@@ -473,6 +473,39 @@ def test_vacuum_never_drops_committed_version(spark, events, tmp_path):
     vacuum(state, keep_last=0)
     assert committed in os.listdir(state)
     assert read_state(spark, state).count() == n
+
+
+def test_read_state_reads_schema_from_pointer(spark, events, tmp_path):
+    """The pointer carries the committed version's schema, so reading the
+    state launches no Spark job and yields the schema inference would. A
+    state committed under the older two-line pointer (version, batch id)
+    still reads back, by inference, and its replay guard still holds."""
+    import os
+
+    from conftest import count_jobs
+
+    from printer_etl_hub_spark.streaming.sink import merge_last_state, read_state
+
+    state = str(tmp_path / "state")
+    base = events.filter(F.col("user_id") < 10).select("user_id", "ts", "event_type")
+    merge_last_state(spark, base, state, "user_id", "ts", 0)
+    cur, n_jobs = count_jobs(spark, "read_state", lambda: read_state(spark, state))
+    assert n_jobs == 0
+    ptr = os.path.join(state, "_CURRENT")
+    with open(ptr, encoding="utf-8") as fh:
+        version, bid = fh.read().splitlines()[:2]
+    assert cur.schema == spark.read.parquet(os.path.join(state, version)).schema
+    want = sorted(map(tuple, cur.collect()))
+
+    with open(ptr, "w", encoding="utf-8") as fh:
+        fh.write(f"{version}\n{bid}")
+    assert sorted(map(tuple, read_state(spark, state).collect())) == want
+    merge_last_state(spark, base, state, "user_id", "ts", 0)  # replay: no-op
+    assert [d for d in os.listdir(state) if d.startswith("v")] == [version]
+    more = events.filter(F.col("user_id") < 20).select("user_id", "ts", "event_type")
+    merge_last_state(spark, more, state, "user_id", "ts", 1)
+    got = {r.user_id for r in read_state(spark, state).collect()}
+    assert got == {r.user_id for r in more.collect()}
 
 
 def test_merge_last_state_replay_is_idempotent(spark, events, tmp_path):
