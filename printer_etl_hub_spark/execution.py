@@ -38,13 +38,13 @@ LOOP_ROWS_PER_PARTITION = 2_000_000
 
 
 @contextmanager
-def loop_execution(spark, n_rows: int, rows_per_partition: int = LOOP_ROWS_PER_PARTITION):
+def loop_execution(spark, n_rows: int):
     """Run an iterative loop body with AQE off and a shuffle width derived
     from ``n_rows`` (the loop's dominant materialized row count), restoring
     the session's settings on every exit path. Yields the derived width so
     the caller can pin explicit repartitions to the same number."""
     conf = spark.conf
-    loop_parts = max(1, -(-int(n_rows) // int(rows_per_partition)))
+    loop_parts = max(1, -(-int(n_rows) // LOOP_ROWS_PER_PARTITION))
     old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
     old_sp = conf.get(
         "spark.sql.shuffle.partitions",

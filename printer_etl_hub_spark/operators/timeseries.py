@@ -345,7 +345,7 @@ def wilcoxon_weekly_table(daily: DataFrame):
     Returns ``(one_row_df, pin)`` — release the pin through
     materialize_release (batch) or unpersist after the write (sink).
     """
-    from ..plans.common import dist_cumsum
+    from ..plans.common import doubled_midranks, tie_term
 
     prev = daily.select(
         F.date_add(F.col("day"), 7).alias("day"), F.col("x").alias("x_prev")
@@ -361,27 +361,13 @@ def wilcoxon_weekly_table(daily: DataFrame):
         F.count(F.lit(1)).cast("bigint").alias("n_v"),
         F.sum(F.when(F.col("pos"), 1).otherwise(0)).cast("bigint").alias("n_pos"),
     )
-    cum, pin = dist_cumsum(hist, ["a"], ["n_v"])
+    w2, pin = doubled_midranks(hist, "a")
     dec19 = "decimal(19,0)"
     dec = "decimal(38,0)"
-    w2 = cum.select(
-        "n_v",
-        "n_pos",
-        (F.lit(2) * (F.col("n_v_cum") - F.col("n_v")) + F.col("n_v") + 1)
-        .cast(dec19)
-        .alias("w2"),
-    )
     agg = w2.agg(
         F.sum("n_v").cast("bigint").alias("n"),
         F.sum(F.col("n_pos").cast(dec19) * F.col("w2")).cast(dec).alias("w2_plus"),
-        F.sum(
-            F.col("n_v").cast("decimal(12,0)")
-            * F.col("n_v").cast("decimal(12,0)")
-            * F.col("n_v").cast("decimal(12,0)")
-            - F.col("n_v").cast("decimal(12,0)")
-        )
-        .cast(dec)
-        .alias("tie_t"),
+        tie_term().alias("tie_t"),
     )
     j = agg.join(F.broadcast(n_pairs))
     nn = F.coalesce(F.col("n"), F.lit(0)).cast(dec19)

@@ -119,48 +119,6 @@ def _assert_release_owner() -> None:
         )
 
 
-def dist_rank(df, order_cols, out: str = "rank", n_parts: int | None = None):
-    """Global 1-based total-order rank WITHOUT a single-partition window
-    (q77/q95's distributed shape): repartitionByRange on the sort key →
-    per-partition row_number (range partitions are globally ordered) →
-    broadcast partition-offset table. ``order_cols`` must be a total
-    order (append a unique id). Returns ``(ranked_frame, pinned)`` — the
-    pinned frame feeds both the rank and the offsets, so the CALLER must
-    release it (pass through :func:`materialize_release`).
-
-    ``n_parts`` defaults to the session's configured shuffle width
-    (``spark.sql.shuffle.partitions``, falling back to
-    ``sparkContext.defaultParallelism``), so on a 1000-executor cluster
-    the rank fans out with the cluster instead of pinning 32 ranges —
-    the 100 TB knob turns itself. The rank values are partitioning-
-    independent (range partitions are globally ordered and offsets are
-    exact counts), so any ``n_parts`` yields identical results.
-    """
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
-    if n_parts is None:
-        n_parts = _default_parts(df)
-    parted = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    lw = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    local = parted.withColumn("_lrn", F.row_number().over(lw))
-    sizes = parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    ow = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sizes.select(
-        "_pid", F.coalesce(F.sum("_cnt").over(ow), F.lit(0)).alias("_off")
-    )
-    ranked = (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out, (F.col("_off") + F.col("_lrn")).cast("bigint"))
-        .drop("_pid", "_lrn", "_off")
-    )
-    return ranked, parted
-
-
 def _default_parts(df) -> int:
     spark = df.sparkSession
     conf = spark.conf.get("spark.sql.shuffle.partitions", None)
@@ -169,119 +127,100 @@ def _default_parts(df) -> int:
     return spark.sparkContext.defaultParallelism
 
 
-def dist_cumsum(df, order_cols, sum_cols, n_parts: int | None = None):
-    """Distributed prefix sum WITHOUT a single-partition window —
-    dist_rank's sibling for running totals (the KS/CUSUM shape):
-    repartitionByRange on the total order → per-partition running sum →
-    broadcast per-partition-total offset table → add. Each ``sum_cols``
-    entry gains a ``<col>_cum`` column holding the inclusive prefix sum
-    in the global ``order_cols`` order. ``order_cols`` must be a total
-    order (append a unique id); ``sum_cols`` must already be EXACT types
-    (bigint / decimal) — a float prefix sum is order-defined and this
-    helper's whole point is that partitioning doesn't change results.
+def dist_cumsum(df, order_cols, sum_cols, group_cols=()):
+    """Distributed prefix sum WITHOUT a single-partition window (the
+    KS/CUSUM, rank and stratified-split shape). Each ``sum_cols`` entry
+    gains a ``<col>_cum`` column holding the inclusive prefix sum in
+    ``order_cols`` order, restarted per ``group_cols`` group:
 
-    Returns ``(frame, pinned)`` — release the pin through
-    :func:`materialize_release`, the dist_rank convention. ``n_parts``
-    defaults to the session's shuffle width (the 100 TB knob turns
-    itself).
+    repartitionByRange on (group, order) at the session's shuffle width
+    (``spark.sql.shuffle.partitions``) — range partitions are globally
+    ordered and a group spans a CONTIGUOUS run of them — then running
+    sums per (partition, group), then a broadcast offset table of
+    per-(partition, group) totals cumulated across the partition order
+    within each group. The result is partitioning-independent, so the
+    width follows the cluster with nothing to tune.
+
+    Contracts: ``order_cols`` totally orders the rows within a group
+    (append a unique id); ``sum_cols`` are EXACT types (bigint /
+    decimal) — a float prefix sum would depend on the partitioning;
+    group keys are non-NULL (the offset join is an equi-join) and
+    low-cardinality, since the offset table has one row per present
+    (partition, group) pair — at most |groups| + width rows — and is
+    broadcast.
+
+    Returns ``(frame, pinned)``: ``frame`` is ``df.columns`` plus the
+    ``_cum`` columns. The pinned range-partitioned frame feeds both the
+    running sums and the offsets, so the CALLER releases it through
+    :func:`materialize_release`.
     """
     from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    if n_parts is None:
-        n_parts = _default_parts(df)
+    keys = ["_pid", *group_cols]
     parted = (
-        df.repartitionByRange(n_parts, *[F.col(c) for c in order_cols])
+        df.repartitionByRange(_default_parts(df), *group_cols, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     lw = (
-        Window.partitionBy("_pid")
-        .orderBy(*[F.col(c) for c in order_cols])
-        .rowsBetween(Window.unboundedPreceding, 0)
+        Window.partitionBy(*keys)
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    local = parted
-    for c in sum_cols:
-        local = local.withColumn(f"_l_{c}", F.sum(F.col(c)).over(lw))
-    totals = parted.groupBy("_pid").agg(
-        *[F.sum(F.col(c)).alias(f"_t_{c}") for c in sum_cols]
+    local = parted.select(
+        "*", *[F.sum(c).over(lw).alias(f"_l_{c}") for c in sum_cols]
     )
-    ow = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_pid",
-        *[
-            F.coalesce(F.sum(F.col(f"_t_{c}")).over(ow), F.lit(0)).alias(f"_o_{c}")
-            for c in sum_cols
-        ],
-    )
-    out = local.join(F.broadcast(offsets), "_pid")
-    for c in sum_cols:
-        out = out.withColumn(f"{c}_cum", F.col(f"_o_{c}") + F.col(f"_l_{c}"))
-    return (
-        out.drop("_pid", *[f"_l_{c}" for c in sum_cols], *[f"_o_{c}" for c in sum_cols]),
-        parted,
-    )
-
-
-def dist_rank_grouped(
-    df,
-    group_cols,
-    order_cols,
-    out: str = "rank",
-    n_parts: int | None = None,
-    broadcast_offsets: bool = True,
-):
-    """Per-GROUP 1-based rank without a per-group single-partition sort
-    (the stratified-split shape): a plain ``row_number() OVER
-    (PARTITION BY group ORDER BY ...)`` puts each whole group on one
-    task, so one 10 TB stratum melts an executor. Instead:
-    repartitionByRange on (group, order) — a group spans a CONTIGUOUS
-    run of range partitions — then per-(partition, group) row_number,
-    then an offset table of per-(partition, group) counts cumulated
-    within the group across the partition order.
-
-    SIZE BOUND of the offset table (corrected — ADVICE r8 #3): one row
-    per PRESENT (partition, group) pair, i.e. |groups| + (number of
-    group runs that cross a partition boundary) ≤ |groups| + n_parts
-    rows. It is NOT n_parts-bounded alone: the forced broadcast assumes
-    a LOW-CARDINALITY group key (current callers: q232/q235
-    per-source strata — a handful of groups). For a high-cardinality
-    group key pass ``broadcast_offsets=False`` and the offset join
-    falls back to a shuffle join that Catalyst/AQE sizes itself.
-
-    ``order_cols`` must totally order rows WITHIN a group. Returns
-    ``(ranked, pinned)`` — the dist_rank convention.
-    """
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
-    if n_parts is None:
-        n_parts = _default_parts(df)
-    gcols = [F.col(c) for c in group_cols]
-    ocols = [F.col(c) for c in order_cols]
-    parted = (
-        df.repartitionByRange(n_parts, *gcols, *ocols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    lw = Window.partitionBy("_pid", *group_cols).orderBy(*ocols)
-    local = parted.withColumn("_lrn", F.row_number().over(lw))
-    sizes = parted.groupBy("_pid", *group_cols).agg(F.count(F.lit(1)).alias("_cnt"))
     ow = (
         Window.partitionBy(*group_cols)
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = sizes.select(
-        "_pid",
-        *group_cols,
-        F.coalesce(F.sum("_cnt").over(ow), F.lit(0)).alias("_off"),
+    offsets = (
+        parted.groupBy(*keys)
+        .agg(*[F.sum(c).alias(f"_t_{c}") for c in sum_cols])
+        .select(
+            *keys,
+            *[
+                F.coalesce(F.sum(f"_t_{c}").over(ow), F.lit(0)).alias(f"_o_{c}")
+                for c in sum_cols
+            ],
+        )
     )
-    if broadcast_offsets:
-        offsets = F.broadcast(offsets)
-    ranked = (
-        local.join(offsets, ["_pid", *group_cols])
-        .withColumn(out, (F.col("_off") + F.col("_lrn")).cast("bigint"))
-        .drop("_pid", "_lrn", "_off")
+    out = local.join(F.broadcast(offsets), keys).select(
+        *df.columns,
+        *[(F.col(f"_o_{c}") + F.col(f"_l_{c}")).alias(f"{c}_cum") for c in sum_cols],
     )
-    return ranked, parted
+    return out, parted
+
+
+def dist_rank(df, order_cols, out: str = "rank", group_cols=()):
+    """1-based rank in ``order_cols`` order, per ``group_cols`` group,
+    WITHOUT a single-partition window: :func:`dist_cumsum` of a literal
+    1, since the inclusive prefix count is the rank. Same contracts and
+    ``(frame, pinned)`` return as :func:`dist_cumsum`; ``frame`` is
+    ``df.columns`` plus the bigint ``out``."""
+    ranked, pin = dist_cumsum(
+        df.withColumn("_one", F.lit(1)), order_cols, ["_one"], group_cols
+    )
+    return ranked.select(*df.columns, F.col("_one_cum").alias(out)), pin
+
+
+def doubled_midranks(hist, value_col):
+    """Doubled midranks of a distinct-value histogram: ``hist`` has one
+    row per distinct ``value_col`` with its bigint tie count ``n_v``.
+    Returns ``(frame, pinned)`` — ``hist.columns`` plus ``w2`` =
+    2·midrank = 2·(rows below v) + n_v + 1, DECIMAL(19,0), integral
+    however many ties — with the :func:`dist_cumsum` pin convention.
+    The oracle twin is ``relational.py::_MIDRANK_SQL``."""
+    cum, pin = dist_cumsum(hist, [value_col], ["n_v"])
+    w2 = F.lit(2) * (F.col("n_v_cum") - F.col("n_v")) + F.col("n_v") + 1
+    return cum.select(*hist.columns, w2.cast("decimal(19,0)").alias("w2")), pin
+
+
+def tie_term() -> Column:
+    """Aggregate Σ(t³−t) over the tie counts ``n_v`` of a
+    :func:`doubled_midranks` histogram — the rank tests' variance
+    correction — exact in DECIMAL(38,0)."""
+    t = F.col("n_v").cast("decimal(12,0)")
+    return F.sum(t * t * t - t).cast("decimal(38,0)")

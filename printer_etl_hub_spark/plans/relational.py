@@ -2461,8 +2461,8 @@ def q209_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE grouped rank pass instead of three chained dist_rank calls
     # (r14, the q234 tall-layout reshape): melt the per-user frame to
     # (metric, value, user_id) and rank within each metric via
-    # dist_rank_grouped — one range-sampling pass + one range exchange +
-    # one (3 + n_parts)-row offset broadcast, where the chain paid a
+    # dist_rank grouped by metric — one range-sampling pass + one range
+    # exchange + one (3 + width)-row offset broadcast, where the chain paid a
     # sampling pass, an exchange, a persist and an offset join PER
     # METRIC (q209 measured 29 → 15 jobs / 133 → 43 stages). The rank
     # order is unchanged: recency/frequency are bigint counts cast to
@@ -2470,7 +2470,7 @@ def q209_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts are nowhere near it) and monetary is already double, so
     # each metric's (value, user_id) total order is bit-identical to
     # the per-metric dist_rank it replaces.
-    from .common import dist_rank_grouped
+    from .common import dist_rank
 
     melted = per.select(
         "user_id",
@@ -2490,8 +2490,8 @@ def q209_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("mv"),
     ).select("user_id", "mv.metric", "mv.value")
-    ranked, pin = dist_rank_grouped(
-        melted, ["metric"], ["value", "user_id"], out="_rank"
+    ranked, pin = dist_rank(
+        melted, ["value", "user_id"], out="_rank", group_cols=["metric"]
     )
     # n_users from the pinned melted frame (3 rows per user): aggregating
     # `per` directly would re-execute the purchase scan + user groupBy.
@@ -5527,7 +5527,7 @@ def _midrank_stats(events: DataFrame):
     NULLs excluded before ranking; below-counts via `dist_cumsum`
     (never a single-partition window over the corpus-scaled
     distinct-value frame)."""
-    from .common import dist_cumsum
+    from .common import doubled_midranks, tie_term
 
     v = F.col("value")
     pool = events.filter(
@@ -5540,36 +5540,19 @@ def _midrank_stats(events: DataFrame):
         F.count(F.lit(1)).cast("bigint").alias("n_tv")
     )
     per_v = tv.groupBy("v").agg(F.sum("n_tv").cast("bigint").alias("n_v"))
-    cum, pin = dist_cumsum(per_v, ["v"], ["n_v"])
-    dec19 = "decimal(19,0)"
-    w2 = cum.select(
-        "v",
-        "n_v",
-        # 2·midrank of value v: ranks below + (below+1) + (below+n_v)
-        (F.lit(2) * (F.col("n_v_cum") - F.col("n_v")) + F.col("n_v") + 1)
-        .cast(dec19)
-        .alias("w2"),
-    )
+    w2, pin = doubled_midranks(per_v, "v")
     per_t = (
         tv.join(w2, "v")
         .groupBy("event_type")
         .agg(
             F.sum("n_tv").cast("bigint").alias("n_a"),
-            F.sum(F.col("n_tv").cast(dec19) * F.col("w2"))
+            F.sum(F.col("n_tv").cast("decimal(19,0)") * F.col("w2"))
             .cast("decimal(38,0)")
             .alias("r2_a"),
         )
     )
     totals = per_v.agg(
-        F.sum("n_v").cast("bigint").alias("n"),
-        F.sum(
-            F.col("n_v").cast("decimal(12,0)")
-            * F.col("n_v").cast("decimal(12,0)")
-            * F.col("n_v").cast("decimal(12,0)")
-            - F.col("n_v").cast("decimal(12,0)")
-        )
-        .cast("decimal(38,0)")
-        .alias("tie_t"),
+        F.sum("n_v").cast("bigint").alias("n"), tie_term().alias("tie_t")
     )
     return per_t, totals, pin
 
@@ -6991,7 +6974,7 @@ def q280_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one per-user groupBy (the only corpus-sized stage), two
     value-histogram groupBys + dist_cumsum rank joins, a 1-row agg.
     """
-    from .common import dist_cumsum
+    from .common import doubled_midranks
 
     t = load_tables(spark, sf_dir)
     per_user = (
@@ -7004,21 +6987,14 @@ def q280_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("day").cast("bigint").alias("y"),
         )
     )
-    dec19 = "decimal(19,0)"
     dec = "decimal(38,0)"
 
     def ranks(col):
         hist = per_user.groupBy(col).agg(
             F.count(F.lit(1)).cast("bigint").alias("n_v")
         )
-        cum, pin = dist_cumsum(hist, [col], ["n_v"])
-        w2 = cum.select(
-            col,
-            (F.lit(2) * (F.col("n_v_cum") - F.col("n_v")) + F.col("n_v") + 1)
-            .cast(dec19)
-            .alias(f"w2_{col}"),
-        )
-        return w2, pin
+        w2, pin = doubled_midranks(hist, col)
+        return w2.select(col, F.col("w2").alias(f"w2_{col}")), pin
 
     w2x, pinx = ranks("x")
     w2y, piny = ranks("y")

@@ -1973,50 +1973,27 @@ def q95_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     differently-ordered float ops and can disagree in the low bits right
     at a cutoff.
 
-    The global rank uses q77's distributed-packing shape, NOT a
-    single-partition window: repartitionByRange on the sort key, a
-    per-partition row_number (range partitions are globally ordered), and
-    a broadcast partition-offset table — every stage parallel, the only
-    tiny object the ≤n_partitions offset row set. At 100 TB, raise the
-    range-partition count with the corpus; nothing else changes.
+    The global rank is ``dist_rank`` (plans/common.py), NOT a
+    single-partition window: a range repartition at the session's
+    shuffle width, per-partition running counts and a broadcast
+    partition-offset table — every corpus-sized stage parallel.
     """
-    from pyspark import StorageLevel
+    from .common import dist_rank
 
     t = load_tables(spark, sf_dir)
     d = t["documents"]
     staged = d.select("doc_id", "text", tokenize(F.col("text")).alias("toks"))
     score = quality_features(F.col("text"), F.col("toks"))["quality_score"]
     scored = staged.select("doc_id", score.alias("q"))
-    parted = (
-        scored.repartitionByRange(32, "q", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)  # feeds sizes AND ranks
-    )
-    lw = Window.partitionBy("pid").orderBy("q", "doc_id")
-    local = parted.withColumn("lrn", F.row_number().over(lw))
-    sizes = parted.groupBy("pid").agg(F.count(F.lit(1)).alias("cnt"))
-    ow = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sizes.select(
-        "pid", F.coalesce(F.sum("cnt").over(ow), F.lit(0)).alias("off")
-    )
-    # n_total from the (persisted) partition sizes — not a third scan of
-    # the documents table.
-    nrow = sizes.agg(F.sum("cnt").alias("n_total"))
-    ranked = (
-        local.join(F.broadcast(offsets), "pid")
-        .join(F.broadcast(nrow))
-        .select(
-            "doc_id",
-            "q",
-            (F.col("off") + F.col("lrn")).alias("rank"),
-            "n_total",
-        )
-    )
+    ranked, pin = dist_rank(scored, ["q", "doc_id"])
+    # n_total from the pinned frame — not a second scan of the documents
+    nrow = pin.agg(F.count(F.lit(1)).alias("n_total"))
     # Integer division only: float `/` then a bigint cast diverges across
     # engines (Spark truncates the cast, DuckDB rounds it).
     decile = (F.expr("((rank - 1) * 10) DIV n_total") + 1).cast("int")
-    return (
-        ranked.select(decile.alias("decile"), "q")
+    res = (
+        ranked.join(F.broadcast(nrow))
+        .select(decile.alias("decile"), "q")
         .groupBy("decile")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -2025,6 +2002,7 @@ def q95_quality_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dsum(F.col("q")) / F.count(F.lit(1)), 6).alias("mean_score"),
         )
     )
+    return materialize_release(res, pin)
 
 
 Q95_SQL = rf"""
@@ -10739,13 +10717,13 @@ def q232_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor(0.9·n_s), so every stratum's proportions are exact to ±1 doc
     and reruns are bit-identical.
 
-    Shape: ``dist_rank_grouped`` (plans/common.py) — per-source rank
-    WITHOUT a per-source single-partition sort (one 10 TB stratum must
-    not become one task; range partitions on (source, digest) keep every
-    task bounded) + a broadcast per-source count join + a 3·|sources|
-    agg.
+    Shape: ``dist_rank`` grouped by source (plans/common.py) — per-source
+    rank WITHOUT a per-source single-partition sort (one 10 TB stratum
+    must not become one task; range partitions on (source, digest) keep
+    every task bounded) + a broadcast per-source count join + a
+    3·|sources| agg.
     """
-    from .common import dist_rank_grouped
+    from .common import dist_rank
 
     t = load_tables(spark, sf_dir)
     d = t["documents"].select(
@@ -10753,7 +10731,7 @@ def q232_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":split"))).alias("dg"),
     )
-    ranked, pin = dist_rank_grouped(d, ["source"], ["dg", "doc_id"], out="r")
+    ranked, pin = dist_rank(d, ["dg", "doc_id"], out="r", group_cols=["source"])
     ns = pin.groupBy("source").agg(F.count(F.lit(1)).cast("bigint").alias("n_s"))
     cut1 = F.floor(F.lit(_SPLIT_TRAIN) * F.col("n_s"))
     cut2 = F.floor(F.lit(_SPLIT_TRAIN + _SPLIT_VAL) * F.col("n_s"))
@@ -10810,11 +10788,11 @@ def q235_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the md5_sample_gate property). q232 splits the whole corpus by
     proportion; this takes an absolute quota.
 
-    Shape: ``dist_rank_grouped`` over (source | digest, doc_id) — the
+    Shape: ``dist_rank`` over (source | digest, doc_id) — the
     per-group rank with NO per-group single-partition sort — then a
     rank filter; output is ≤ K·|sources| rows however large the corpus.
     """
-    from .common import dist_rank_grouped
+    from .common import dist_rank
 
     t = load_tables(spark, sf_dir)
     d = t["documents"].select(
@@ -10822,7 +10800,7 @@ def q235_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":bal"))).alias("dg"),
     )
-    ranked, pin = dist_rank_grouped(d, ["source"], ["dg", "doc_id"], out="r")
+    ranked, pin = dist_rank(d, ["dg", "doc_id"], out="r", group_cols=["source"])
     res = ranked.filter(F.col("r") <= _BAL_K).select("source", "doc_id", "r")
     return materialize_release(res, pin)
 
@@ -12484,7 +12462,7 @@ def q308_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one scan computing (lang, score) (the only corpus-sized
     stage), a distinct-score groupBy + dist_cumsum, 1-row arithmetic.
     """
-    from .common import dist_cumsum
+    from .common import doubled_midranks
 
     t = load_tables(spark, sf_dir)
     d = t["documents"].filter(F.col("lang").isNotNull()).select(
@@ -12499,14 +12477,8 @@ def q308_score_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_tv")
     )
     per_v = tv.groupBy("v").agg(F.sum("n_tv").cast("bigint").alias("n_v"))
-    cum, pin = dist_cumsum(per_v, ["v"], ["n_v"])
+    w2, pin = doubled_midranks(per_v, "v")
     dec19 = "decimal(19,0)"
-    w2 = cum.select(
-        "v",
-        (F.lit(2) * (F.col("n_v_cum") - F.col("n_v")) + F.col("n_v") + 1)
-        .cast(dec19)
-        .alias("w2"),
-    )
     per_g = (
         tv.filter(F.col("is_en"))
         .join(w2, "v")
@@ -12813,13 +12785,13 @@ def q288_dim_robust_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtraction of two picked doubles. NaN excluded and −0.0
     normalized before ranking (the q266 float-portability pins).
 
-    Shape: ranks via `dist_rank_grouped` — NEVER a per-dim
+    Shape: ranks via `dist_rank` grouped by dim — NEVER a per-dim
     single-partition sort (a plain PARTITION BY dim window puts a
     corpus/64 slice on one task); 64 groups keep the offset table
     broadcast-sized. One posexplode + the range-partitioned rank are
     the only corpus-sized stages.
     """
-    from .common import dist_rank_grouped
+    from .common import dist_rank
 
     t = load_tables(spark, sf_dir)
     x = F.col("xr")
@@ -12837,7 +12809,7 @@ def q288_dim_robust_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "dim", F.when(x == 0.0, F.lit(0.0)).otherwise(x).alias("x")
         )
     )
-    ranked, pin = dist_rank_grouped(pos, ["dim"], ["x", "vec_id"])
+    ranked, pin = dist_rank(pos, ["x", "vec_id"], group_cols=["dim"])
     counts = pos.groupBy("dim").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     j = ranked.join(F.broadcast(counts), "dim")
     picks = {

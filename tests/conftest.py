@@ -83,9 +83,9 @@ _LIMIT_NODES = (
 )
 _AGG_NODES = ("HashAggregate", "ObjectHashAggregate", "SortAggregate")
 # Aggregates grouped ONLY by a physical-partition id or a fixed bucket id
-# are n_parts-/n_buckets-bounded however big the corpus is: the dist_rank /
-# q77 / q95 offset-table discipline (plans/common.py).
-_BOUNDED_KEY = ("_pid#", "pid#", "_bucket#")
+# are shuffle-width-/n_buckets-bounded however big the corpus is: the
+# dist_cumsum / q77 offset-table discipline (plans/common.py).
+_BOUNDED_KEY = ("_pid#", "_bucket#")
 
 
 def _children(node):
@@ -164,10 +164,15 @@ def registry_plans(spark):
     checkpoint runs — read after execution, an adaptive plan prints its
     final and its initial plan, doubling every node count. Each query
     starts from an empty cache, as the bench and gate harnesses start it.
+
+    ``pin_leak`` records whether anything is still cached once the
+    query's deferred pins are flushed: a pin it never handed to
+    ``materialize_release`` outlives the query.
     """
     from printer_etl_hub_spark.plans import REGISTRY
     from printer_etl_hub_spark.plans.common import flush_pending_release
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
     frame_cls = type(spark.range(1))
     checkpoint = frame_cls.localCheckpoint
     plans: list = []
@@ -186,6 +191,8 @@ def registry_plans(spark):
             plans.clear()
             plan = spec.fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan()
             facts[name] = _plan_facts([(plan.toString(), plan), *plans])
+            flush_pending_release()
+            facts[name]["pin_leak"] = not cache.isEmpty()
         plans.clear()
     spark.catalog.clearCache()
     flush_pending_release()

@@ -162,8 +162,8 @@ def test_q77_token_shards_distributed_no_global_sort(spark):
 def test_q95_deciles_distributed_no_global_sort(spark):
     """q95's rank must (a) equal the sequential single-window ntile-style
     assignment exactly and (b) keep the document rows out of any
-    single-partition exchange — only the ≤32-row partition-offset window
-    may run on one partition. Same scale discipline as q77."""
+    single-partition exchange — only the shuffle-width-row partition-offset
+    window may run on one partition. Same scale discipline as q77."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 

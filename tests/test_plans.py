@@ -245,7 +245,7 @@ BNLJ_ALLOWED = {
     "q196_ivf_probe_sweep": 3,  # composes q31's guarded theta ground truth (q114's class)
     "q200_budget_allocation": 3,  # two 1-row total/leftover scalar broadcasts (q145's class)
     "q202_shard_balance": 1,  # 1-row mean-shard scalar broadcast (q89's class)
-    # 10 -> 4 at r14: the tall one-pass dist_rank_grouped reshape left one
+    # 10 -> 4 at r14: the tall one-pass grouped dist_rank reshape left one
     # corpus-max + one n_users scalar broadcast per consumer subtree
     # (q89's class); the per-metric rank chains' duplicated scalars died
     # with the chain.
@@ -340,6 +340,49 @@ def test_no_unintended_nested_loop_joins(registry_plans):
         if f["bnlj"] != BNLJ_ALLOWED.get(name, 0)
     }
     assert not bad, f"BNLJ count drift (got, whitelisted): {bad}"
+
+
+#: Queries that build a cached frame they never release: still cached
+#: after the query's deferred pins are flushed. ngram_jaccard_pairs'
+#: shingle cache and inverted index (operators/dedup.py) account for the
+#: near-dup family; q71 leaks its variant-explode level caches. Keep this
+#: list exact: a fixed query leaves it, and a new leak fails the walk.
+PIN_LEAKS_ALLOWED = {
+    "q29_ngram_jaccard",
+    "q32_embedding_lsh",
+    "q38_ivf_topk",
+    "q71_json_harvest",
+    "q72_dup_clusters",
+    "q78_decontamination",
+    "q82_embedding_dedup",
+    "q102_leakage_safe_split",
+    "q114_ann_recall",
+    "q121_boilerplate_filter",
+    "q126_lsh_recall",
+    "q131_winnow_matches",
+    "q135_quality_keeper",
+    "q137_drop_ledger",
+    "q155_degree_histogram",
+    "q170_cluster_spread",
+    "q180_source_dup_matrix",
+    "q182_band_config_sweep",
+    "q186_dup_cluster_sizes",
+    "q198_snapshot_neardup",
+    "q210_lsh_pr",
+    "q219_neardup_survivorship",
+    "q255_exactsubstr",
+}
+
+
+def test_registry_pin_leaks_are_the_known_ones(registry_plans):
+    """Cache pins are released on every exit path: once a query's
+    deferred pins are flushed, nothing it persisted may stay cached,
+    apart from the known leaks listed above."""
+    leaking = {name for name, f in registry_plans.items() if f["pin_leak"]}
+    assert leaking == PIN_LEAKS_ALLOWED, (
+        f"new leaks: {sorted(leaking - PIN_LEAKS_ALLOWED)}; "
+        f"fixed, drop from the list: {sorted(PIN_LEAKS_ALLOWED - leaking)}"
+    )
 
 
 def test_q240_core_nonempty_at_gate_sfs(spark):

@@ -6,6 +6,7 @@ SURVEY.md §5.4. One Spark job per function (vectorized), not per example.
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
@@ -558,6 +559,18 @@ def test_containment_pairs_invariants(spark):
     assert all(4 not in k for k in got)  # the unrelated doc pairs with nobody
 
 
+@contextmanager
+def _shuffle_width(spark, n: int):
+    """Run the body at ``spark.sql.shuffle.partitions = n`` — the width
+    the dist_* helpers range-partition at — restoring it on exit."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
 def test_dist_rank_is_total_order_permutation(spark):
     """dist_rank must emit exactly the permutation 1..n consistent with
     the (metric, id) sort — across ties and across range-partition
@@ -566,8 +579,9 @@ def test_dist_rank_is_total_order_permutation(spark):
 
     rows = [(i, (i * 7919) % 13) for i in range(1, 501)]  # many ties
     df = spark.createDataFrame(rows, "id long, m long")
-    ranked, pin = dist_rank(df, ["m", "id"], out="r", n_parts=8)
-    got = sorted((r.r, r.m, r.id) for r in ranked.collect())
+    with _shuffle_width(spark, 8):
+        ranked, pin = dist_rank(df, ["m", "id"], out="r")
+        got = sorted((r.r, r.m, r.id) for r in ranked.collect())
     pin.unpersist()
     flush_pending_release()
     assert [g[0] for g in got] == list(range(1, 501))
@@ -576,35 +590,31 @@ def test_dist_rank_is_total_order_permutation(spark):
 
 
 def test_dist_rank_default_nparts_tracks_session(spark):
-    """With n_parts omitted, dist_rank derives its range-partition count
-    from the session's configured shuffle width — the 100 TB knob turns
-    itself (VERDICT r7 item #6) — and the RESULTS are identical at any
-    width (range partitions are globally ordered, offsets exact)."""
+    """dist_rank derives its range-partition count from the session's
+    configured shuffle width — the 100 TB knob turns itself — and the
+    RESULTS are identical at any width (range partitions are globally
+    ordered, offsets exact)."""
     from printer_etl_hub_spark.plans.common import dist_rank, flush_pending_release
 
     rows = [(i, (i * 31) % 7) for i in range(1, 201)]
     df = spark.createDataFrame(rows, "id long, m long")
 
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        results = {}
-        widths = {}
-        for conf_parts in ("3", "11"):
-            spark.conf.set("spark.sql.shuffle.partitions", conf_parts)
+    results = {}
+    widths = {}
+    for conf_parts in (3, 11):
+        with _shuffle_width(spark, conf_parts):
             ranked, pin = dist_rank(df, ["m", "id"], out="r")
             widths[conf_parts] = pin.rdd.getNumPartitions()
             results[conf_parts] = sorted(
                 (r.r, r.m, r.id) for r in ranked.collect()
             )
-            pin.unpersist()
-            flush_pending_release()
-        # The partition width follows the session config...
-        assert widths["3"] == 3 and widths["11"] == 11, widths
-        # ...and the emitted ranks are width-independent.
-        assert results["3"] == results["11"]
-        assert [g[0] for g in results["3"]] == list(range(1, 201))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        pin.unpersist()
+        flush_pending_release()
+    # The partition width follows the session config...
+    assert widths == {3: 3, 11: 11}, widths
+    # ...and the emitted ranks are width-independent.
+    assert results[3] == results[11]
+    assert [g[0] for g in results[3]] == list(range(1, 201))
 
 
 def test_pending_release_ledger_is_single_threaded(spark):
@@ -685,8 +695,9 @@ def test_dist_cumsum_matches_sequential_prefix_sum(spark):
 
     rows = [(i, (i * 13) % 97, (i * 7) % 11) for i in range(1, 301)]
     df = spark.createDataFrame(rows, "id long, a long, b long")
-    cum, pin = dist_cumsum(df, ["id"], ["a", "b"], n_parts=7)
-    got = sorted((r.id, r.a_cum, r.b_cum) for r in cum.collect())
+    with _shuffle_width(spark, 7):
+        cum, pin = dist_cumsum(df, ["id"], ["a", "b"])
+        got = sorted((r.id, r.a_cum, r.b_cum) for r in cum.collect())
     pin.unpersist()
     flush_pending_release()
     ea = eb = 0
@@ -699,20 +710,23 @@ def test_dist_cumsum_matches_sequential_prefix_sum(spark):
 
 
 def test_dist_rank_grouped_matches_per_group_row_number(spark):
-    """dist_rank_grouped must equal row_number() OVER (PARTITION BY g
-    ORDER BY ...) — per group, 1-based, no gaps — including groups that
-    span several range partitions."""
+    """dist_rank(..., group_cols=) must equal row_number() OVER
+    (PARTITION BY g ORDER BY ...) — per group, 1-based, no gaps —
+    including groups that span several range partitions; its columns are
+    the input's, in order, plus the rank."""
     from pyspark.sql import Window
 
     from printer_etl_hub_spark.plans.common import (
-        dist_rank_grouped,
+        dist_rank,
         flush_pending_release,
     )
 
     rows = [(i, f"g{i % 3}", (i * 37) % 50) for i in range(1, 401)]
     df = spark.createDataFrame(rows, "id long, g string, m long")
-    ranked, pin = dist_rank_grouped(df, ["g"], ["m", "id"], out="r", n_parts=9)
-    got = {(r.g, r.m, r.id): r.r for r in ranked.collect()}
+    with _shuffle_width(spark, 9):
+        ranked, pin = dist_rank(df, ["m", "id"], out="r", group_cols=["g"])
+        assert ranked.columns == ["id", "g", "m", "r"]
+        got = {(r.g, r.m, r.id): r.r for r in ranked.collect()}
     pin.unpersist()
     flush_pending_release()
     w = Window.partitionBy("g").orderBy("m", "id")
@@ -805,7 +819,7 @@ import pytest as _pytest
 
 
 @_pytest.mark.parametrize(
-    "seed,n_rows,n_groups,n_parts",
+    "seed,n_rows,n_groups,width",
     [
         (1, 1, 1, 1),      # single row, single partition
         (2, 7, 1, 16),     # one group across many partitions
@@ -814,8 +828,8 @@ import pytest as _pytest
         (5, 50, 50, 8),    # every row its own group
     ],
 )
-def test_dist_helpers_randomized_shapes(spark, seed, n_rows, n_groups, n_parts):
-    """dist_rank / dist_rank_grouped / dist_cumsum against their
+def test_dist_helpers_randomized_shapes(spark, seed, n_rows, n_groups, width):
+    """dist_rank (global and grouped) / dist_cumsum against their
     sequential references across adversarial shape corners: single
     partition, group-spans-partitions, skewed strata, singleton groups.
     Deterministic LCG data (no RNG flakiness); includes negative and
@@ -823,7 +837,6 @@ def test_dist_helpers_randomized_shapes(spark, seed, n_rows, n_groups, n_parts):
     from printer_etl_hub_spark.plans.common import (
         dist_cumsum,
         dist_rank,
-        dist_rank_grouped,
         flush_pending_release,
     )
 
@@ -834,15 +847,17 @@ def test_dist_helpers_randomized_shapes(spark, seed, n_rows, n_groups, n_parts):
         rows.append((i, f"g{x % n_groups}", (x % 23) - 11))  # dup + negative keys
     df = spark.createDataFrame(rows, "id long, g string, m long")
 
-    ranked, pin = dist_rank(df, ["m", "id"], out="r", n_parts=n_parts)
-    got = sorted((r.r, r.m, r.id) for r in ranked.collect())
+    with _shuffle_width(spark, width):
+        ranked, pin = dist_rank(df, ["m", "id"], out="r")
+        got = sorted((r.r, r.m, r.id) for r in ranked.collect())
     pin.unpersist(); flush_pending_release()
     want = sorted(rows, key=lambda t: (t[2], t[0]))
     assert [g[0] for g in got] == list(range(1, n_rows + 1))
     assert [(m, i) for _, m, i in got] == [(m, i) for i, _, m in want]
 
-    granked, gpin = dist_rank_grouped(df, ["g"], ["m", "id"], out="r", n_parts=n_parts)
-    got_g = {(r.g, r.id): r.r for r in granked.collect()}
+    with _shuffle_width(spark, width):
+        granked, gpin = dist_rank(df, ["m", "id"], out="r", group_cols=["g"])
+        got_g = {(r.g, r.id): r.r for r in granked.collect()}
     gpin.unpersist(); flush_pending_release()
     want_g: dict = {}
     for i, g, m in sorted(rows, key=lambda t: (t[1], t[2], t[0])):
@@ -850,8 +865,9 @@ def test_dist_helpers_randomized_shapes(spark, seed, n_rows, n_groups, n_parts):
     assert got_g == want_g
 
     cdf = df.select("id", F.col("m").alias("a"))
-    cum, cpin = dist_cumsum(cdf, ["id"], ["a"], n_parts=n_parts)
-    got_c = sorted((r.id, r.a_cum) for r in cum.collect())
+    with _shuffle_width(spark, width):
+        cum, cpin = dist_cumsum(cdf, ["id"], ["a"])
+        got_c = sorted((r.id, r.a_cum) for r in cum.collect())
     cpin.unpersist(); flush_pending_release()
     run, want_c = 0, []
     for i, _, m in rows:
@@ -1003,31 +1019,3 @@ def test_seasonality_strength_bounds(spark):
     assert r.eta2_dow is None or -1e-9 <= r.eta2_dow <= 1.0 + 1e-9
 
 
-def test_dist_rank_grouped_broadcast_optout_identical(spark):
-    """dist_rank_grouped's high-cardinality escape hatch
-    (broadcast_offsets=False) must produce EXACTLY the same per-group
-    ranks as the default broadcast path — the hint changes the join
-    strategy, never the result."""
-    from printer_etl_hub_spark.plans.common import (
-        dist_rank_grouped,
-        flush_pending_release,
-    )
-
-    rows = [(i, (i * 31) % 7, (i * 7919) % 13) for i in range(1, 401)]
-    df = spark.createDataFrame(rows, "id long, g long, m long")
-    out = {}
-    for flag in (True, False):
-        ranked, pin = dist_rank_grouped(
-            df, ["g"], ["m", "id"], out="r", n_parts=8, broadcast_offsets=flag
-        )
-        out[flag] = sorted((r.g, r.r, r.id) for r in ranked.collect())
-        pin.unpersist()
-        flush_pending_release()
-    assert out[True] == out[False]
-    # ranks are 1..|group| within each group
-    from collections import defaultdict
-
-    per = defaultdict(list)
-    for g, r, _ in out[True]:
-        per[g].append(r)
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in per.values())
