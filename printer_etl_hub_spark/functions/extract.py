@@ -180,23 +180,6 @@ def error_code(col: Column) -> Column:
     return F.nullif(F.regexp_extract(col, r"\b([A-Z]\d-\d{3,5})\b", 1), F.lit(""))
 
 
-def toner_code(col: Column) -> Column:
-    """F24 toner-code extraction chain: paren code → after-"HP" code
-    (rejecting `\\d{3}V`) → last generic token.
-
-    Reference: `adapters/toner_type_snmp.py:11-13,54-66`.
-    """
-    paren = F.nullif(F.regexp_extract(col, r"\(([A-Z]{1,3}\d{2,5}[A-Z]{0,2})\)", 1), F.lit(""))
-    after_hp = F.nullif(
-        F.regexp_extract(col, r"\bHP\s+(?!\d{3}V\b)([A-Z]?\d{2,5}[A-Z]{0,2})\b", 1),
-        F.lit(""),
-    )
-    generic = F.element_at(
-        F.regexp_extract_all(col, r"\b([A-Z]{1,3}\d{2,5}[A-Z]{0,2})\b", 1), -1
-    )
-    return F.coalesce(paren, after_hp, generic)
-
-
 def toner_id(col: Column) -> Column:
     """F25 toner-id regex: `W\\d{4}[A-Z]X?` | `MLT-[A-Z]\\d{3,5}[A-Z]*` |
     `[A-Z]{2}\\d{3}[A-Z]`.

@@ -1292,9 +1292,7 @@ def q54_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     Written as the correlated scalar subquery TPC-H specifies — Catalyst
     decorrelates it into an aggregate + join (no per-row re-execution);
     the same rewrite a hand-tuned plan would use."""
-    t = load_tables(spark, sf_dir)
-    t["lineitem"].createOrReplaceTempView("lineitem")
-    t["part"].createOrReplaceTempView("part")
+    load_tables(spark, sf_dir)  # points the lineitem/part views at sf_dir
     return spark.sql("""
         SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(25,6))) AS DOUBLE) / 7.0 AS avg_yearly
         FROM lineitem JOIN part ON p_partkey = l_partkey

@@ -49,6 +49,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # PySpark's call-site capture (on by default) wraps every
+        # Column/DataFrame call in extra py4j round trips and a Python stack
+        # walk, only to name the building line in Spark errors: a plan build
+        # makes about 3x the round trips with it. Static: a running session
+        # cannot change it.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Shuffle/spill through tmpfs when available: local-mode shuffles are
     # disk-bound on this host's slow /tmp. On a cluster the platform sets
@@ -72,8 +78,18 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable configs to an externally-created session.
 
     The correctness driver hands us its own SparkSession; timestamp rendering
-    must be UTC to line up with the (UTC-naive) DuckDB oracle, and AQE is a
-    pure win at any scale.
+    must be UTC to line up with the (UTC-naive) DuckDB oracle. AQE is forced
+    on, and it is a trade-off, not a free win: it re-plans joins and
+    coalesces partitions from runtime statistics, but each query stage is
+    its own Spark job. q72 at sf0.01 runs 17 jobs with AQE and 7 without
+    (same rows), and at sf0.1 some queries are faster without it and others
+    slower.
+
+    ``get_spark`` also turns off PySpark's call-site capture
+    (``spark.python.sql.dataFrameDebugging.enabled``), which costs extra
+    py4j round trips on every Column/DataFrame call. That conf is static,
+    so it cannot be applied here: a session built elsewhere keeps the
+    capture on.
     """
     for k, v in {
         "spark.sql.session.timeZone": "UTC",

@@ -2,12 +2,13 @@
 
 The reference's operating model (SURVEY.md §2.7): every pipeline run is one
 micro-batch that re-polls the whole fleet and overwrites per-device state.
-Structured Streaming expresses the schedule natively — a ``rate`` source
-emits one tick per poll interval; each tick fans out to the (broadcast)
-fleet inventory; the fetch stage (`sources/fetch.py` semantics, inlined
-here for the streaming plan) probes devices partition-parallel with
-offline-defaults; results flow to the last-value-wins state sink
-(`streaming/sink.py`) or any downstream windowed aggregation.
+Structured Streaming expresses the schedule natively — the caller's ticks
+stream (e.g. a ``rate`` source) has one row per poll interval; each tick
+fans out to the (broadcast) fleet inventory; the fetch stage
+(`sources/fetch.py` semantics, inlined here for the streaming plan) probes
+devices partition-parallel with offline-defaults; results flow to the
+last-value-wins state sink (`streaming/sink.py`) or any downstream
+windowed aggregation.
 
 This replaces the candidate "DataSourceV2 device-poll source" from
 SURVEY.md §4 with pure composition — rate source + broadcast join + Python
@@ -25,27 +26,10 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 Transport = Callable[[str, dict], dict]
-
-
-def poll_ticks(spark: SparkSession, interval_seconds: int = 60) -> DataFrame:
-    """One row per poll cycle (streaming): a 1 Hz rate source filtered to
-    whole-interval seconds. Tests inject their own ticks frame instead."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", 1)
-        .load()
-        .filter(F.col("timestamp").cast("long") % interval_seconds == 0)
-        .select(
-            F.col("timestamp").alias("poll_ts"),
-            (F.col("timestamp").cast("long") / interval_seconds)
-            .cast("long")
-            .alias("cycle_ts"),
-        )
-    )
 
 
 def fleet_poll_stream(

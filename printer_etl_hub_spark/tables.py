@@ -70,35 +70,34 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 
     Memoized per (session, dir): DataFrames are lazy logical plans, so
     reusing them across registry queries removes pure overhead (ten parquet
-    footer reads + temp-view churn per query); the corpus dirs are
-    immutable for a run. The cache lives ON the session object, so it dies
-    with the session — no global registry pinning stopped sessions alive.
-    The runtime conf re-applies on every call (cached or not): it is
-    session state a caller may have changed between queries.
+    footer reads per query); the corpus dirs are immutable for a run. The
+    cache lives ON the session object, so it dies with the session — no
+    global registry pinning stopped sessions alive. The session's temp views
+    (events, lineitem, ...) point at the corpus loaded last; a load re-points
+    them only when that corpus changes, so a same-dir load issues no view
+    command. The runtime conf re-applies on every call (cached or not): it
+    is session state a caller may have changed between queries.
     """
     import os
 
     apply_runtime_conf(spark)
-    cache: dict[str, dict[str, DataFrame]] | None = getattr(
-        spark, "_peh_table_cache", None
-    )
-    if cache is None:
-        cache = {}
-        try:
-            spark._peh_table_cache = cache  # type: ignore[attr-defined]
-        except AttributeError:
-            pass  # slots-restricted session: fall back to uncached loads
+    if not hasattr(spark, "_peh_table_cache"):
+        spark._peh_table_cache = {}  # type: ignore[attr-defined]
+        spark._peh_views_dir = None  # type: ignore[attr-defined]
+    cache: dict[str, dict[str, DataFrame]] = spark._peh_table_cache  # type: ignore[attr-defined]
     key = os.path.abspath(sf_dir)
     cached = cache.get(key)
-    if cached is not None:
-        # Re-point the session temp views at THIS corpus: a session that
-        # loaded a second sf_dir in between left the views (events,
-        # lineitem, ...) on the other corpus, and any spark.sql over those
-        # names would silently read the wrong data. Cheap — view
-        # registration is catalog metadata, no parquet footer reads.
+    if cached is None:
+        cached = cache[key] = _read_corpus(spark, sf_dir)
+    if spark._peh_views_dir != key:  # type: ignore[attr-defined]
         for name, df in cached.items():
             df.createOrReplaceTempView(name)
-        return dict(cached)
+        spark._peh_views_dir = key  # type: ignore[attr-defined]
+    return dict(cached)
+
+
+def _read_corpus(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Read the corpus tables of ``sf_dir`` (no temp views)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     out: dict[str, DataFrame] = {}
     for name in TABLE_NAMES:
@@ -119,7 +118,5 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         for c, t in df.dtypes:
             if t == "timestamp_ntz":
                 df = df.withColumn(c, F.col(c).cast("timestamp"))
-        df.createOrReplaceTempView(name)
         out[name] = df
-    cache[key] = out
-    return dict(out)
+    return out

@@ -48,6 +48,29 @@ def count_jobs(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def count_round_trips(fn):
+    """Run ``fn``; return its result and the number of py4j commands this
+    thread sent the JVM meanwhile. py4j's finalizer thread, which frees
+    stale Java references whenever Python collects them, is not counted."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    send, me, n = ClientServerConnection.send_command, threading.get_ident(), 0
+
+    def counted(self, *args, **kwargs):
+        nonlocal n
+        n += threading.get_ident() == me
+        return send(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counted
+    try:
+        out = fn()
+    finally:
+        ClientServerConnection.send_command = send
+    return out, n
+
+
 @pytest.fixture(scope="session")
 def duck():
     return duck_views(SF_ORACLE)

@@ -434,3 +434,29 @@ def test_fleet_cycle_job_count(spark, tmp_path):
 
     cycle(0)
     assert cycle(1) <= 8
+
+
+def test_fleet_report_build_round_trips(spark):
+    """Building the report over frames that are already read stays within a
+    py4j round-trip budget: the build is the driver-side share of a poll
+    cycle. PySpark's call-site capture, if on, about triples it."""
+    from conftest import count_round_trips
+
+    inputs = [
+        spark.createDataFrame(
+            [("Company_Grouped", "1001", "10.0.0.1", "M402dn")],
+            "group string, ID string, `Printer IP` string, Type string",
+        ),
+        spark.createDataFrame(
+            _walk_rows("10.0.0.1", 1, 3, "Black", 19, 0, 60),
+            "ip string, oid string, value string",
+        ),
+        spark.createDataFrame(
+            [("10.0.0.1", 1, 4, "Door open")],
+            "ip string, row_idx int, severity int, description string",
+        ),
+        spark.createDataFrame(
+            [("M402dn", ["CF226A"])], "Type string, tonerType array<string>"
+        ),
+    ]
+    assert count_round_trips(lambda: fleet_toner_report(*inputs))[1] <= 1250

@@ -88,6 +88,19 @@ def test_relational_paths_have_no_python(registry_plans):
     assert not bad, bad
 
 
+def test_q01_build_round_trips(spark):
+    """Building q01 over already-loaded tables stays within a py4j
+    round-trip budget: build cost is driver-side and independent of the
+    host. PySpark's call-site capture, if on, more than triples it."""
+    from conftest import count_round_trips
+
+    from printer_etl_hub_spark.tables import load_tables
+
+    load_tables(spark, SF_SMOKE)
+    fn = REGISTRY["q01_pricing_summary"].fn
+    assert count_round_trips(lambda: fn(spark, SF_SMOKE))[1] <= 140
+
+
 def test_q01_wholestage_codegen(spark):
     # formatted mode hides codegen ids under an unexecuted AdaptiveSparkPlan,
     # so ask for the codegen-mode explain explicitly

@@ -193,3 +193,26 @@ def test_load_tables_cache_hit_repoints_temp_views(spark):
     assert spark.sql("SELECT count(*) AS n FROM lineitem").first().n == n_a
     load_tables(spark, b)  # cache hit, views flip back
     assert spark.sql("SELECT count(*) AS n FROM lineitem").first().n == n_b
+
+
+def test_load_tables_same_dir_issues_no_view_command(spark, monkeypatch):
+    """A load of the corpus the views already point at registers nothing;
+    a load of another corpus re-points every view."""
+    import os
+
+    from conftest import SF_SMOKE
+
+    from printer_etl_hub_spark.tables import TABLE_NAMES, load_tables
+
+    frame_cls = type(load_tables(spark, SF_SMOKE)["lineitem"])
+    register, calls = frame_cls.createOrReplaceTempView, []
+
+    def counted(df, name):
+        calls.append(name)
+        register(df, name)
+
+    monkeypatch.setattr(frame_cls, "createOrReplaceTempView", counted)
+    load_tables(spark, SF_SMOKE)
+    assert calls == []
+    load_tables(spark, os.path.join(os.path.dirname(SF_SMOKE), "sf0.01"))
+    assert sorted(calls) == sorted(TABLE_NAMES)
