@@ -1,7 +1,7 @@
 """Markov removal-effect attribution core shared by the batch query and
 the streaming sink.
 
-`attribution_table` solves the absorbing chain for a TRANSITION-COUNT
+`attribution_frames` solves the absorbing chain for a TRANSITION-COUNT
 frame — q263 (plans/relational.py) builds those counts in one pass over
 events, `streaming/corpus.py::attribution_sink` accumulates them
 incrementally from a journey-state store — so the stream≡batch
@@ -22,20 +22,6 @@ ATTR_START = "__start__"
 ATTR_CONV = "__conv__"
 ATTR_NONE = "__none__"
 ATTR_LOST = "__lost__"
-
-
-def attribution_table(trans: DataFrame) -> DataFrame:
-    """(prev, nxt, n) pooled journey-transition counts → (channel,
-    p_base, p_removed, removal_effect, attribution), one row per
-    channel — the QUERY-path wrapper: pins release through
-    `plans/common.py::materialize_release`'s deferred ledger, which is
-    query-at-a-time and thread-scoped. Streaming sinks (foreachBatch
-    runs on a streaming thread) must use `attribution_frames` and
-    release the pins themselves after writing."""
-    from ..plans.common import materialize_release
-
-    res, pins = attribution_frames(trans)
-    return materialize_release(res, *pins)
 
 
 def _solve_chain(pdf):
@@ -83,7 +69,7 @@ def _solve_chain(pdf):
 def attribution_frames(trans: DataFrame):
     """The chain solve: returns (result_frame, pins) where ``pins`` are
     the persisted shared subtrees the lazy result still references —
-    the caller decides the release discipline. ``prev``/``nxt`` use the
+    the caller releases them after its action. ``prev``/``nxt`` use the
     sentinel states ATTR_START / ATTR_CONV / ATTR_LOST; channels are
     every non-sentinel state.
 

@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines.
 
-Four families, all shuffle-disciplined for 100 TB:
+Ten families, all shuffle-disciplined for 100 TB:
 
 - exact:        hash-groupBy on content digest — one shuffle on the digest.
 - MinHash LSH:  shingle → k md5-min signatures → band buckets → bucket
@@ -8,16 +8,28 @@ Four families, all shuffle-disciplined for 100 TB:
                 join is an equi-join on (band_id, band_signature), never a
                 cross join.
 - SimHash:      16-bit per-doc signature (hamming buckets for near-dup text).
-- n-gram Jaccard: inverted-index pair counting — explode shingles, equi-join
-                on shingle, count shared per pair. Scales with total postings
+- n-gram Jaccard / containment / cross-corpus: inverted-index pair
+                counting — explode shingles, equi-join on shingle, count
+                shared per pair. Scales with total postings
                 (documents × shingles), not documents².
+- segment dedup: keep the first occurrence of each fixed-width span (CCNet).
+- SemDeDup:     k-means clusters, cosine pairs within clusters, CC keepers.
+- boilerplate:  drop every span present in too many documents (C4).
+- ExactSubstr:  excise duplicated k-token windows at any alignment.
+- edit distance: blocked Levenshtein pairs.
+- winnowing:    MOSS fingerprints and the pairs that share them.
 
 Hashes are md5-based so the DuckDB oracle reproduces every result exactly
 (no xxhash divergence between engines).
+
+An operator whose result still reads a frame it persisted returns
+``(frame, pins)``; the caller releases the pins (the rule is stated at
+`plans/common.py::materialize_release`).
 """
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -266,35 +278,21 @@ def minhash_index_pairs(
     return pairs
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float = 0.8,
-    shingle_n: int = 3,
-    max_df: int | None = None,
-    pins: list | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via an inverted-index join.
-
-    jaccard(A,B) = |A∩B| / (|A|+|B|-|A∩B|); the intersection count comes from
-    an equi-join on shingle (postings join), never a doc×doc cross join.
-    Output: a_id, b_id, jaccard (double) for pairs ≥ threshold.
+def _ngram_pair_counts(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int, max_df: int | None
+) -> tuple[DataFrame, list]:
+    """The inverted-index body the n-gram pair operators share. Returns
+    ``(counts, pins)``: ``counts`` is one row per document pair sharing a
+    shingle, ``(a_id, b_id, n_inter, n_a, n_b, jaccard)`` with a_id <
+    b_id, shingle-set sizes and Jaccard over the ``max_df``-filtered
+    shingle space; ``pins`` are the shingle cache and the inverted index
+    it still reads.
 
     ``max_df`` drops shingles appearing in more than that many documents
     (stop-shingles). This is THE scale knob: a shingle shared by d docs
     contributes d² join rows, so one degenerate common phrase can dominate
     the whole job; ultra-common shingles carry no near-dup signal anyway.
-    Jaccard is then computed exactly over the df-filtered shingle space.
-
-    ``pins``: optional caller-owned list the operator appends its
-    persisted frames (shingle cache, inverted index) to — the dist_rank
-    convention, so a plan-level caller can defer-release them through
-    ``materialize_release`` instead of leaving the blocks to the
-    harness's per-query ``clearCache``. Omitted → previous behavior.
     """
-    from pyspark import StorageLevel
-
     # Persist the computed shingle arrays BEFORE exploding: Generate
     # re-evaluates a computed child expression per OUTPUT row (measured 5x
     # the construction cost), and an exchange barrier doesn't help because
@@ -304,8 +302,6 @@ def ngram_jaccard_pairs(
     sh = _doc_shingles(df, id_col, text_col, shingle_n).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    if pins is not None:
-        pins.append(sh)
     # Postings carry a NUMERIC shingle hash — grouping/joining runs on a
     # bigint instead of a string (collation-free compares, tighter shuffle
     # rows). A 60-bit collision would merge two shingles; at dedup scales the
@@ -325,11 +321,7 @@ def ngram_jaccard_pairs(
     # in the executed plan without this). Persisting the index is the
     # algorithm's own materialization step, same as any IVF/LSH index
     # build; MEMORY_AND_DISK spills gracefully at corpus scale.
-    from pyspark import StorageLevel
-
     grouped = grouped.persist(StorageLevel.MEMORY_AND_DISK)
-    if pins is not None:
-        pins.append(grouped)
     # Pair generation is a double explode of each posting list — a flatMap,
     # not a self-join: a shingle held by d docs emits exactly C(d,2) ordered
     # pairs with zero extra shuffle. With the df cap, d ≤ max_df bounds the
@@ -349,20 +341,46 @@ def ngram_jaccard_pairs(
     )
     # sizes scales with |docs| — NOT broadcastable at 100 TB; AQE picks the
     # strategy (broadcast at small SF, shuffle join at scale).
-    out = (
+    counts = (
         inter.join(sizes.alias("sa"), F.col("a_id") == F.col("sa.doc_id"))
         .join(sizes.alias("sb"), F.col("b_id") == F.col("sb.doc_id"))
         .select(
             "a_id",
             "b_id",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_inter")).cast("double")
-            ).alias("jaccard"),
+            "n_inter",
+            F.col("sa.n_sh").alias("n_a"),
+            F.col("sb.n_sh").alias("n_b"),
         )
-        .filter(F.col("jaccard") >= threshold)
     )
-    return out
+    jaccard = F.col("n_inter").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_inter")
+    ).cast("double")
+    return counts.withColumn("jaccard", jaccard), [sh, grouped]
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float = 0.8,
+    shingle_n: int = 3,
+    max_df: int | None = None,
+) -> tuple[DataFrame, list]:
+    """Exact n-gram Jaccard near-dup pairs via an inverted-index join.
+
+    jaccard(A,B) = |A∩B| / (|A|+|B|-|A∩B|); the intersection count comes from
+    an equi-join on shingle (postings join), never a doc×doc cross join.
+    Returns ``(pairs, pins)``: ``pairs`` is (a_id, b_id, jaccard double)
+    for pairs ≥ threshold, and it reads the persisted ``pins`` (shingle
+    cache, inverted index), which the caller releases. ``max_df`` is the
+    stop-shingle cap of :func:`_ngram_pair_counts`; Jaccard is exact over
+    the df-filtered shingle space.
+    """
+    counts, pins = _ngram_pair_counts(df, id_col, text_col, shingle_n, max_df)
+    pairs = counts.select("a_id", "b_id", "jaccard").filter(
+        F.col("jaccard") >= threshold
+    )
+    return pairs, pins
 
 
 def ngram_containment_pairs(
@@ -372,8 +390,7 @@ def ngram_containment_pairs(
     threshold: float = 0.9,
     shingle_n: int = 3,
     max_df: int | None = None,
-    pins: list | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, list]:
     """Asymmetric n-gram containment pairs: c(A→B) = |A∩B| / |A| — the
     quote/inclusion detector Jaccard misses. A short document fully
     quoted inside a long one has tiny Jaccard (the union is dominated by
@@ -382,59 +399,21 @@ def ngram_containment_pairs(
     (a_id, b_id, c_a_in_b, c_b_in_a, jaccard) for pairs where
     max(c_a_in_b, c_b_in_a) ≥ threshold.
 
-    Same inverted-index shape and ``max_df`` stop-shingle cap as
-    ``ngram_jaccard_pairs`` (the postings join is identical; only the
-    final normalization differs), so the 10×-audited scale properties
-    carry over unchanged. ``pins`` as in ``ngram_jaccard_pairs``: the
-    caller-owned release list for the two persisted frames.
+    Same inverted-index body and ``max_df`` stop-shingle cap as
+    :func:`ngram_jaccard_pairs` (only the final projection differs), so
+    the 10×-audited scale properties carry over unchanged, and the same
+    ``(pairs, pins)`` return.
     """
-    from pyspark import StorageLevel
-
-    sh = _doc_shingles(df, id_col, text_col, shingle_n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if pins is not None:
-        pins.append(sh)
-    postings = sh.select(
-        "doc_id", F.explode("shingles").alias("shingle")
-    ).select("doc_id", _md5_60bit(F.col("shingle")).alias("sh_h"))
-    grouped = postings.groupBy("sh_h").agg(F.collect_list("doc_id").alias("ds"))
-    if max_df is not None:
-        grouped = grouped.filter(F.size("ds") <= max_df)
-    grouped = grouped.persist(StorageLevel.MEMORY_AND_DISK)
-    if pins is not None:
-        pins.append(grouped)
-    pairs = (
-        grouped.select(F.explode("ds").alias("a_id"), F.col("ds"))
-        .select("a_id", F.explode("ds").alias("b_id"))
-        .filter(F.col("a_id") < F.col("b_id"))
-    )
-    inter = pairs.groupBy("a_id", "b_id").agg(F.count(F.lit(1)).alias("n_inter"))
-    sizes = (
-        grouped.select(F.explode("ds").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_sh"))
-    )
+    counts, pins = _ngram_pair_counts(df, id_col, text_col, shingle_n, max_df)
     ni = F.col("n_inter").cast("double")
-    c_ab = ni / F.col("sa.n_sh").cast("double")
-    c_ba = ni / F.col("sb.n_sh").cast("double")
-    return (
-        inter.join(sizes.alias("sa"), F.col("a_id") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("b_id") == F.col("sb.doc_id"))
-        .select(
-            "a_id",
-            "b_id",
-            c_ab.alias("c_a_in_b"),
-            c_ba.alias("c_b_in_a"),
-            (
-                ni
-                / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_inter")).cast(
-                    "double"
-                )
-            ).alias("jaccard"),
-        )
-        .filter(F.greatest(F.col("c_a_in_b"), F.col("c_b_in_a")) >= threshold)
-    )
+    pairs = counts.select(
+        "a_id",
+        "b_id",
+        (ni / F.col("n_a").cast("double")).alias("c_a_in_b"),
+        (ni / F.col("n_b").cast("double")).alias("c_b_in_a"),
+        "jaccard",
+    ).filter(F.greatest(F.col("c_a_in_b"), F.col("c_b_in_a")) >= threshold)
+    return pairs, pins
 
 
 def simhash_docs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -459,7 +438,7 @@ def ngram_jaccard_cross(
     threshold: float = 0.8,
     shingle_n: int = 3,
     max_df: int | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, list]:
     """Cross-corpus contamination detection: n-gram Jaccard pairs where one
     side is in ``df_a`` (e.g. the training corpus) and the other in ``df_b``
     (e.g. an eval/test set) — the decontamination sweep every training-data
@@ -470,15 +449,18 @@ def ngram_jaccard_cross(
     within-corpus pairs are ever generated, so a huge train side never pays
     its own quadratic fan-out). ``max_df`` caps the COMBINED document
     frequency, bounding the join fan-out per shingle at any corpus size.
-    Output: a_id, b_id, jaccard. Caller guarantees ids are disjoint across
-    frames (tag upstream if not).
+    Returns ``(pairs, pins)``: ``pairs`` is (a_id, b_id, jaccard), and it
+    reads the persisted ``pins`` (both shingle caches, the df filter, both
+    postings), which the caller releases. Caller guarantees ids are
+    disjoint across frames (tag upstream if not).
     """
-    from pyspark import StorageLevel
+    pins: list = []
 
     def posts(df: DataFrame, out_id: str) -> DataFrame:
         sh = _doc_shingles(df, id_col, text_col, shingle_n).persist(
             StorageLevel.MEMORY_AND_DISK
         )
+        pins.append(sh)
         return sh.select(
             F.col("doc_id").alias(out_id), F.explode("shingles").alias("shingle")
         ).select(out_id, _md5_60bit(F.col("shingle")).alias("sh_h"))
@@ -494,10 +476,12 @@ def ngram_jaccard_cross(
             .select("sh_h")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
+        pins.append(freq)
         pa = pa.join(freq, "sh_h", "left_semi")
         pb = pb.join(freq, "sh_h", "left_semi")
     pa = pa.persist(StorageLevel.MEMORY_AND_DISK)
     pb = pb.persist(StorageLevel.MEMORY_AND_DISK)
+    pins += [pa, pb]
     inter = (
         pa.join(pb, "sh_h")
         .groupBy("a_id", "b_id")
@@ -505,7 +489,7 @@ def ngram_jaccard_cross(
     )
     sizes_a = pa.groupBy("a_id").agg(F.count(F.lit(1)).alias("na"))
     sizes_b = pb.groupBy("b_id").agg(F.count(F.lit(1)).alias("nb"))
-    return (
+    pairs = (
         inter.join(sizes_a, "a_id")
         .join(sizes_b, "b_id")
         .select(
@@ -518,6 +502,7 @@ def ngram_jaccard_cross(
         )
         .filter(F.col("jaccard") >= threshold)
     )
+    return pairs, pins
 
 
 def segment_dedup(
@@ -604,8 +589,6 @@ def semantic_dedup(
     Returns (id_col, cluster_id, keeper_id, is_keeper); NULL-embedding
     rows are excluded (no geometry — kmeans_fit posture).
     """
-    from pyspark import StorageLevel
-
     from .components import connected_components
     from .similarity import kmeans_fit
 
@@ -733,7 +716,7 @@ def boilerplate_filter(
     text_col: str,
     seg_tokens: int = 10,
     max_doc_df: int = 2,
-) -> DataFrame:
+) -> tuple[DataFrame, list]:
     """C4-style boilerplate removal by DOCUMENT frequency: segment each
     document into fixed ``seg_tokens``-token spans, count how many
     DISTINCT documents each span occurs in, and drop EVERY occurrence of
@@ -744,8 +727,9 @@ def boilerplate_filter(
     span; this drops all of them, because a span repeated across many
     documents is boilerplate, not content.
 
-    Returns one row per document:
-    ``(id, n_segs, n_kept, kept_frac, kept_text)``.
+    Returns ``(docs, pins)``: ``docs`` has one row per document,
+    ``(id, n_segs, n_kept, kept_frac, kept_text)``, and it reads the
+    persisted span postings in ``pins``, which the caller releases.
 
     Plan shape: narrow segmentation, one key-bounded shuffle for the
     per-span distinct-document count (span hash is the key, rows are
@@ -753,8 +737,6 @@ def boilerplate_filter(
     shuffle to the document id for re-assembly. Nothing is quadratic:
     cost tracks total spans, the df table tracks DISTINCT spans.
     """
-    from pyspark import StorageLevel
-
     w = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     starts = F.sequence(F.lit(1), F.size("w"), F.lit(seg_tokens))
     segs = F.transform(
@@ -765,8 +747,7 @@ def boilerplate_filter(
         .select("_id", F.posexplode(segs).alias("seg_idx", "seg"))
         .withColumn("seg_h", F.md5("seg"))
         # Feeds BOTH the df-count build and the probe side — pin it so the
-        # scan+segment subtree runs once (cache released at next gate
-        # entry, per __spark_entry__._gate_wrapped).
+        # scan+segment subtree runs once.
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     common = (
@@ -779,7 +760,7 @@ def boilerplate_filter(
     kept_struct = F.when(
         F.col("_drop").isNull(), F.struct(F.col("seg_idx"), F.col("seg"))
     )
-    return (
+    docs = (
         marked.groupBy("_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_segs"),
@@ -801,6 +782,7 @@ def boilerplate_filter(
             "kept_text",
         )
     )
+    return docs, [ex]
 
 
 def exactsubstr_excise(
@@ -809,7 +791,7 @@ def exactsubstr_excise(
     text_col: str,
     k: int = 50,
     min_docs: int = 2,
-) -> DataFrame:
+) -> tuple[DataFrame, list]:
     """ExactSubstr span EXCISION (Lee et al. 2022, arXiv:2107.06499,
     "Deduplicating Training Data Makes Language Models Better", §4.1):
     remove from every document every token covered by a ``k``-token
@@ -830,8 +812,9 @@ def exactsubstr_excise(
     repeated only WITHIN one document stay (min_docs counts DISTINCT
     documents) — self-repetition is structure, not crawl duplication.
 
-    Returns one row per document:
-    ``(id, n_tokens, n_dup_tokens, kept_frac, kept_text)``.
+    Returns ``(docs, pins)``: ``docs`` has one row per document,
+    ``(id, n_tokens, n_dup_tokens, kept_frac, kept_text)``, and it reads
+    the persisted window postings in ``pins``, which the caller releases.
 
     Plan shape: repartition-first (the in-array window expansion is
     CPU-bound — the q245 single-file-corpus lesson), per-doc window
@@ -849,8 +832,6 @@ def exactsubstr_excise(
     exactsubstr_ingest_sink` + `exactsubstr_from_spans`), so the
     stream≡batch equivalence is structural.
     """
-    from pyspark import StorageLevel
-
     base = _es_base(df, id_col, text_col)
     postings = _es_postings(base, k).persist(StorageLevel.MEMORY_AND_DISK)
     # ^ feeds BOTH the df-count build and the probe side (q121 rule).
@@ -861,7 +842,7 @@ def exactsubstr_excise(
         .select("gh")
     )
     starts = postings.join(dup_h, "gh", "left_semi").select("_id", "i")
-    return _es_reassemble(base, starts, id_col, k)
+    return _es_reassemble(base, starts, id_col, k), [postings]
 
 
 def _es_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1179,7 +1160,7 @@ def winnow_match_pairs(
     w: int = 4,
     min_shared: int = 2,
     max_bucket: int | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, list]:
     """Document pairs sharing >= ``min_shared`` winnowing fingerprint
     HASHES — the MOSS-style match step over :func:`winnow_fingerprints`'
     selections. Because winnowing guarantees any shared substring of
@@ -1187,7 +1168,9 @@ def winnow_match_pairs(
     bounds its count of independently-copied regions — the ranking
     plagiarism/near-dup triage actually uses.
 
-    Returns ``(a_id, b_id, n_shared)`` with a_id < b_id.
+    Returns ``(pairs, pins)``: ``pairs`` is ``(a_id, b_id, n_shared)``
+    with a_id < b_id; with ``max_bucket`` it reads the persisted
+    fingerprint table in ``pins``, which the caller releases.
 
     Plan shape: per-doc distinct fingerprint sets (narrow — the
     fingerprint op is zero-shuffle), one equi-join on fp_hash, one pair
@@ -1203,10 +1186,10 @@ def winnow_match_pairs(
         .select(F.col(id_col).alias("_id"), "fp_hash")
         .distinct()
     )
+    pins = []
     if max_bucket is not None:
-        from pyspark import StorageLevel
-
         fp = fp.persist(StorageLevel.MEMORY_AND_DISK)
+        pins.append(fp)
         keep = (
             fp.groupBy("fp_hash")
             .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1221,10 +1204,11 @@ def winnow_match_pairs(
     b = fp.select(F.col("_id").alias("b_id"), "fp_hash").repartition(
         n_part, F.col("fp_hash")
     )
-    return (
+    pairs = (
         a.join(b, "fp_hash")
         .filter(F.col("a_id") < F.col("b_id"))
         .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
+    return pairs, pins

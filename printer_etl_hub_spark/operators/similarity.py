@@ -16,6 +16,7 @@ DuckDB oracle produce bit-identical sums (sequential left folds both sides).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -221,7 +222,7 @@ def ivf_topk(
     n_centroids: int | None = None,
     n_probe: int = 2,
     centroids: DataFrame | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, list]:
     """IVF (inverted-file) approximate top-k cosine neighbors.
 
     Tuning at scale: probe cost ≈ n · n_probe · (n / n_centroids), so
@@ -244,7 +245,10 @@ def ivf_topk(
     of the brute-force baseline, and the only shuffle is on the (int) cell
     id. Recall loss is the standard IVF tradeoff, tuned by (c, n_probe).
 
-    Output matches cosine_topk_bruteforce: (vec_id, neighbor_id, cos_sim, rn).
+    Returns ``(neighbors, pins)``: ``neighbors`` matches
+    cosine_topk_bruteforce, (vec_id, neighbor_id, cos_sim, rn), and it
+    reads the persisted assignment table in ``pins``, which the caller
+    releases.
     """
     from pyspark.sql import Window
 
@@ -283,8 +287,6 @@ def ivf_topk(
     )
     # cells + probes both read `ranked` — persist the index build (IVF's own
     # materialization step) instead of recomputing the assignment twice.
-    from pyspark import StorageLevel
-
     ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
     cells = ranked.filter(F.col("crn") == 1).select(
         F.col("cent_id").alias("cell"),
@@ -310,7 +312,7 @@ def ivf_topk(
     )
     scored2 = cand.select(F.col("vid"), F.col("m_id"), cos)
     w = Window.partitionBy("vid").orderBy(F.col("cos_sim").desc(), F.col("m_id").asc())
-    return (
+    neighbors = (
         scored2.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select(
@@ -320,6 +322,7 @@ def ivf_topk(
             "rn",
         )
     )
+    return neighbors, [ranked]
 
 
 def ivf_probe_sweep(
@@ -329,8 +332,7 @@ def ivf_probe_sweep(
     k: int = 3,
     n_centroids: int | None = None,
     probes: tuple[int, ...] = (1, 2, 4),
-    pins: list | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, list]:
     """``ivf_topk`` swept over the n_probe knob in ONE index pass:
     output (n_probe, vec_id, neighbor_id, rn) for every level in
     ``probes``. The candidate set at probe level p is a prefix of the
@@ -340,14 +342,9 @@ def ivf_probe_sweep(
     produced it, and re-ranks per level with a filter — no re-assignment,
     no re-scoring, exactly the one-pass posture of the q146/q182/q185
     threshold sweeps. This is the tuning table the (c, n_probe) decision
-    reads next to its recall harness.
-
-    ``pins``: optional caller-owned list the persisted assignment table
-    is appended to (the dist_rank convention) so a plan-level caller can
-    defer-release it through ``materialize_release``; omitted → the
-    block lives until the harness's per-query ``clearCache``.
+    reads next to its recall harness. Same ``(neighbors, pins)`` return
+    as ``ivf_topk``, with the leading ``n_probe`` column.
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     max_p = max(probes)
@@ -380,8 +377,6 @@ def ivf_probe_sweep(
         .filter(F.col("crn") <= max_p)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if pins is not None:
-        pins.append(ranked)
     cells = ranked.filter(F.col("crn") == 1).select(
         F.col("cent_id").alias("cell"),
         F.col("vid").alias("m_id"),
@@ -412,7 +407,7 @@ def ivf_probe_sweep(
     w = Window.partitionBy("n_probe", "vid").orderBy(
         F.col("cos_sim").desc(), F.col("m_id").asc()
     )
-    return (
+    neighbors = (
         tagged.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select(
@@ -423,6 +418,7 @@ def ivf_probe_sweep(
             "rn",
         )
     )
+    return neighbors, [ranked]
 
 
 def sign_bucket(vec: Column, bits: int = 12) -> Column:
@@ -441,18 +437,18 @@ def sign_lsh_pairs(
     vec_col: str,
     bits: int = 12,
     min_cos: float = 0.8,
-) -> DataFrame:
+) -> tuple[DataFrame, list]:
     """Near-duplicate embedding pairs: same sign-LSH bucket AND cosine ≥ min_cos.
 
-    Output: a_id, b_id (a<b), bucket, cos_sim (rounded 6).
+    Returns ``(pairs, pins)``: ``pairs`` is a_id, b_id (a<b), bucket,
+    cos_sim (rounded 6), and it reads the persisted bucketed base in
+    ``pins``, which the caller releases.
 
     Tuning at scale: candidate pairs ≈ Σ bucket_size², so ``bits`` must grow
     with the corpus (≈ log2(n) keeps average bucket size constant); the
     exact per-pair cosine is a sequential fold (oracle-exact), so the pair
     count — not the bucket assignment — is the cost to engineer down.
     """
-    from pyspark import StorageLevel
-
     base = with_vector_norm(df.select(F.col(id_col).alias("vid"), vec_col), vec_col)
     base = base.withColumn("bucket", sign_bucket(F.col("vec_d"), bits)).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -479,10 +475,10 @@ def sign_lsh_pairs(
         b, (F.col("bucket") == F.col("b_bucket")) & (F.col("a_id") < F.col("b_id"))
     )
     cos = _dot(F.col("a_vec"), F.col("b_vec")) / (F.col("a_norm") * F.col("b_norm"))
-    return (
-        pairs.select("a_id", "b_id", "bucket", F.round(cos, 6).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= min_cos)
-    )
+    pairs = pairs.select(
+        "a_id", "b_id", "bucket", F.round(cos, 6).alias("cos_sim")
+    ).filter(F.col("cos_sim") >= min_cos)
+    return pairs, [base]
 
 
 def kmeans_fit(
@@ -545,8 +541,6 @@ def kmeans_fit(
     corpus to rebuild exactly this frame). Omitted → released here, as
     before.
     """
-    from pyspark import StorageLevel
-
     spark = df.sparkSession
     base = (
         # Spread BEFORE the per-round map work: vector corpora often
@@ -934,8 +928,6 @@ def pq_train_encode(
         )
         .filter(F.col("vd").isNotNull())
     )
-    from pyspark import StorageLevel
-
     dsub = F.expr(f"size(vd) DIV {m}")
     sv = (
         base.withColumn("sub", F.explode(F.sequence(F.lit(0), F.lit(m - 1))))

@@ -52,23 +52,40 @@ def md5_sample_gate(col: Column, frac: float, salt: str = "sample") -> Column:
 
 
 def materialize_release(out, *pinned):
-    """Cache-hygiene idiom for a plan that persists a shared subtree its
-    RETURNED frame still references: DEFER the release. The pins stay
-    registered until the NEXT materialize_release call (or an explicit
-    :func:`flush_pending_release`), so the caller's first action on
-    ``out`` still reads the cache — the persist materializes once, inside
-    that action — and nothing outlives one query in a session that keeps
-    calling queries. The gate/bench harnesses additionally clearCache at
-    query entry, which makes the later unpersist a no-op.
+    """Return ``out`` and release ``pinned`` after the caller's action.
+
+    The one pin rule. A persisted frame ("pin") is released by whoever
+    returns the frame that last reads it:
+
+    - a lazy operator whose returned frame still reads a frame it
+      persisted returns ``(frame, pins)`` and releases nothing;
+    - an eager operator, one that runs its own jobs and returns a
+      checkpointed frame (``connected_components``, ``semantic_dedup``),
+      unpersists its pins before it returns;
+    - a registry query function passes every pin it holds, its own and
+      its operators', to this function ONCE, in its return statement.
+      Iterative tails pass them to ``execution.posture_tail`` /
+      ``bounded_tail`` instead.
+
+    The release is DEFERRED: the pins stay registered until the NEXT
+    materialize_release call (or an explicit :func:`flush_pending_release`),
+    so the caller's first action on ``out`` still reads the cache — the
+    persist materializes once, inside that action — and nothing outlives
+    one query in a session that keeps calling queries. That is also why
+    a call must come last: every call first flushes the ledger, so pins
+    registered earlier in the same query (or by a query function it
+    composes) would be dropped before the caller's action reads them,
+    and the action would recompute their subtrees. The gate/bench
+    harnesses additionally clearCache at query entry.
+    `tests/test_plans.py::test_registry_leaks_no_pins` names any query
+    that leaves a pin cached.
 
     Why not materialize eagerly here (the round-6 mechanism)? Measured at
     sf0.1 best-of-3: an eager ``localCheckpoint`` OR ``persist+count`` of
     the result costs 2-4.5x wall-clock on node-/doc-cardinality outputs
     (q132 0.79s lazy vs 3.5s eager; q90 1.19 vs 2.8; q124 0.54 vs 1.0)
     because it materializes EVERY output column in an extra pass, while
-    the caller's own action usually prunes columns / aggregates. The
-    deferred form keeps the r5 wall-clock exactly and still bounds cache
-    lifetime to one query.
+    the caller's own action usually prunes columns / aggregates.
     """
     _assert_release_owner()
     flush_pending_release()

@@ -1403,9 +1403,8 @@ def q71_json_harvest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spread the (still narrow) doc rows first; at lake scale the scan has
     # many splits and this repartition coalesces into AQE's plan harmlessly.
     doc = doc.repartition(spark.sparkContext.defaultParallelism)
-    # persist_levels: each ladder level feeds two consumers; caching it is a
-    # 4x wall win at 10x scale (14s → 3.7s for 7.5M leaves)
-    return harvest_json(doc, "payload", ("o_orderkey",), max_depth=3, persist_levels=True)
+    leaves, levels = harvest_json(doc, "payload", ("o_orderkey",), max_depth=3)
+    return materialize_release(leaves, *levels)
 
 
 Q71_SQL = """
@@ -5088,14 +5087,14 @@ ORDER BY digit
 #: truncated Neumann series Σ Qᵏ R — 16 synchronous rounds in BOTH
 #: engines (the q251 pinned-iteration discipline; the oracle unrolls
 #: the same 16 steps as chained CTEs). The chain solve itself lives in
-#: operators/attribution.py::attribution_table, shared verbatim with
+#: operators/attribution.py::attribution_frames, shared verbatim with
 #: the streaming journey-state sink — stream≡batch is structural.
 from ..operators.attribution import ATTR_CONV as _ATTR_CONV
 from ..operators.attribution import ATTR_LOST as _ATTR_LOST
 from ..operators.attribution import ATTR_NONE as _ATTR_NONE
 from ..operators.attribution import ATTR_ROUNDS as _ATTR_ROUNDS
 from ..operators.attribution import ATTR_START as _ATTR_START
-from ..operators.attribution import attribution_table
+from ..operators.attribution import attribution_frames
 
 _ATTR_CONV_TYPE = "purchase"
 
@@ -5184,9 +5183,9 @@ def q263_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("prev", "nxt")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    res = attribution_table(trans)
+    res, pins = attribution_frames(trans)
     pre.unpersist(blocking=False)
-    return res
+    return materialize_release(res, *pins)
 
 
 def _attr_sql_steps(k: int) -> str:

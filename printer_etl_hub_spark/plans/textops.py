@@ -251,9 +251,10 @@ _J_MAX_DF = 100  # stop-shingle cap: bounds the postings join at any corpus size
 
 def q29_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
-    return ngram_jaccard_pairs(
+    pairs, pins = ngram_jaccard_pairs(
         t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
+    return materialize_release(pairs, *pins)
 
 
 def _sql_jaccard_pairs(threshold: float) -> str:
@@ -354,9 +355,10 @@ _LSH_MIN_COS = 0.25  # corpus embeddings are near-orthogonal (max cos ≈ 0.51)
 
 def q32_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
-    return sign_lsh_pairs(
+    pairs, pins = sign_lsh_pairs(
         t["embeddings"], "vec_id", "embedding", bits=_LSH_BITS, min_cos=_LSH_MIN_COS
     )
+    return materialize_release(pairs, *pins)
 
 
 _bucket_terms = " + ".join(
@@ -390,10 +392,11 @@ _IVF_PROBE = 2
 
 def q38_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
-    return ivf_topk(
+    nbrs, pins = ivf_topk(
         t["embeddings"], "vec_id", "embedding",
         k=3, n_centroids=_IVF_C, n_probe=_IVF_PROBE,
     )
+    return materialize_release(nbrs, *pins)
 
 
 _SQL_DOT = (
@@ -560,10 +563,10 @@ def q72_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
     t = load_tables(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(
+    pairs, pins = ngram_jaccard_pairs(
         t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
-    return connected_components(pairs, "a_id", "b_id")
+    return materialize_release(connected_components(pairs, "a_id", "b_id"), *pins)
 
 
 Q72_SQL = f"""
@@ -768,9 +771,10 @@ def q78_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t["documents"].withColumn("_par", F.pmod(h, 2))
     train = d.filter(F.col("_par") == 0).drop("_par")
     testc = d.filter(F.col("_par") == 1).drop("_par")
-    return ngram_jaccard_cross(
+    pairs, pins = ngram_jaccard_cross(
         train, testc, "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
+    return materialize_release(pairs, *pins)
 
 
 Q78_SQL = f"""
@@ -860,10 +864,9 @@ def q81_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("_rn")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )  # consumed by the pair build AND the final projection
-    _pins: list = []
-    pairs = ngram_jaccard_pairs(
+    pairs, pins = ngram_jaccard_pairs(
         kept.select("doc_id", "text"), "doc_id", "text",
-        threshold=0.8, max_df=_J_MAX_DF, pins=_pins,
+        threshold=0.8, max_df=_J_MAX_DF,
     )
     comp = connected_components(pairs, "a_id", "b_id")
     out = kept.join(comp, kept["doc_id"] == comp["node"], "left").filter(
@@ -876,7 +879,7 @@ def q81_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "quality_score",
         doc_fingerprint64(F.col("text")).alias("fp64"),
     )
-    return materialize_release(res, kept, *_pins)
+    return materialize_release(res, kept, *pins)
 
 
 Q81_SQL = f"""
@@ -967,11 +970,11 @@ def q82_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = load_tables(spark, sf_dir)
     emb = t["embeddings"]
-    pairs = sign_lsh_pairs(
+    pairs, pins = sign_lsh_pairs(
         emb, "vec_id", "embedding", bits=_LSH_BITS, min_cos=_EDUP_MIN_COS
     )
     comp = connected_components(pairs, "a_id", "b_id")
-    return emb.select("vec_id").join(
+    res = emb.select("vec_id").join(
         comp, emb["vec_id"] == comp["node"], "left"
     ).select(
         "vec_id",
@@ -980,6 +983,7 @@ def q82_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_keeper"
         ),
     )
+    return materialize_release(res, *pins)
 
 
 Q82_SQL = f"""
@@ -2547,10 +2551,12 @@ def leakage_safe_split(
     if components is None:
         from ..operators.components import connected_components
 
-        pairs = ngram_jaccard_pairs(
+        pairs, pins = ngram_jaccard_pairs(
             docs, id_col, text_col, threshold=threshold, max_df=max_df
         )
         components = connected_components(pairs, "a_id", "b_id")
+        for p in pins:  # CC's labels are checkpointed: nothing reads them
+            p.unpersist(blocking=False)
     comp = components.select("node", "component")
     base = docs.select(id_col).join(comp, docs[id_col] == comp["node"], "left")
     rep = F.coalesce(F.col("component"), F.col(id_col))
@@ -3134,7 +3140,7 @@ def q114_ann_recall(
     ex = cosine_topk_bruteforce(
         emb, "vec_id", "embedding", k=3, max_n=None, queries=qset
     )
-    iv = ivf_topk(
+    iv, pins = ivf_topk(
         emb, "vec_id", "embedding",
         k=3, n_centroids=_IVF_C, n_probe=_IVF_PROBE,
     )
@@ -3144,7 +3150,7 @@ def q114_ann_recall(
         # so the approximate side also prices at sample size.
         iv = iv.filter(md5_sample_gate(F.col("vec_id"), sample_frac, salt="annq"))
     iv = iv.select("vec_id", "neighbor_id", F.lit(1).alias("_hit"))
-    return (
+    res = (
         ex.select("vec_id", "neighbor_id")
         .join(iv, ["vec_id", "neighbor_id"], "left")
         .groupBy("vec_id")
@@ -3161,6 +3167,7 @@ def q114_ann_recall(
             ).alias("recall"),
         )
     )
+    return materialize_release(res, *pins)
 
 
 Q114_SQL = f"""
@@ -3709,9 +3716,10 @@ def q121_boilerplate_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     one doc-keyed re-assembly — cost tracks total spans, never spans².
     """
     t = load_tables(spark, sf_dir)
-    return boilerplate_filter(
+    docs, pins = boilerplate_filter(
         t["documents"], "doc_id", "text", SEGMENT_TOKENS, _BP_MAX_DOC_DF
     )
+    return materialize_release(docs, *pins)
 
 
 Q121_SQL = rf"""
@@ -4085,18 +4093,19 @@ def q126_lsh_recall(
         docs = docs.filter(
             md5_sample_gate(F.col("doc_id"), sample_frac, salt="lshdoc")
         )
-    truth = ngram_jaccard_pairs(
+    truth, pins = ngram_jaccard_pairs(
         docs, "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
     cand = minhash_lsh_pairs(docs, "doc_id", "text").select(
         "a_id", "b_id", F.lit(1).alias("_hit")
     )
-    return truth.join(cand, ["a_id", "b_id"], "left").select(
+    res = truth.join(cand, ["a_id", "b_id"], "left").select(
         "a_id",
         "b_id",
         F.round("jaccard", 6).alias("jaccard"),
         F.coalesce(F.col("_hit"), F.lit(0)).cast("bigint").alias("lsh_hit"),
     )
+    return materialize_release(res, *pins)
 
 
 Q126_SQL = f"""
@@ -4612,11 +4621,12 @@ def q131_winnow_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quadratic-output AQE guard), one pair groupBy.
     """
     t = load_tables(spark, sf_dir)
-    return winnow_match_pairs(
+    pairs, pins = winnow_match_pairs(
         t["documents"], "doc_id", "text",
         k=_WINNOW_K, w=_WINNOW_W, min_shared=_WN_MIN_SHARED,
         max_bucket=_WN_MAX_BUCKET,
     )
+    return materialize_release(pairs, *pins)
 
 
 Q131_SQL = f"""
@@ -4671,10 +4681,8 @@ def q132_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     nn = t["documents"].count()
     if nn == 0:
         return spark.createDataFrame([], "doc_id bigint, pagerank double")
-    _pins: list = []
-    pairs = ngram_jaccard_pairs(
-        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF,
-        pins=_pins,
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
     edges = (
         pairs.select(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
@@ -4706,7 +4714,7 @@ def q132_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = ranks.select(
         F.col("node").alias("doc_id"), F.round("pr", 9).alias("pagerank")
     )
-    return materialize_release(res, edges, ed, *_pins)
+    return materialize_release(res, edges, ed, *pins)
 
 
 def _sql_pr_round(prev: str, out: str) -> str:
@@ -4925,7 +4933,7 @@ def q135_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
     t = load_tables(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(
+    pairs, pins = ngram_jaccard_pairs(
         t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
     comp = connected_components(pairs.select("a_id", "b_id"), "a_id", "b_id")
@@ -4942,12 +4950,13 @@ def q135_quality_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     win = Window.partitionBy("component").orderBy(
         F.col("qs").desc(), F.col("doc_id").asc()
     )
-    return j.withColumn("rn", F.row_number().over(win)).select(
+    res = j.withColumn("rn", F.row_number().over(win)).select(
         "doc_id",
         "component",
         F.round("qs", 6).alias("quality_score"),
         (F.col("rn") == 1).alias("is_keeper"),
     )
+    return materialize_release(res, *pins)
 
 
 Q135_SQL = f"""
@@ -5098,11 +5107,14 @@ def q137_drop_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", (F.col("rn") == 1).alias("is_first"))
     )
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF)
-    comp = connected_components(pairs.select("a_id", "b_id"), "a_id", "b_id")
-    bp = boilerplate_filter(docs, "doc_id", "text", SEGMENT_TOKENS, _BP_MAX_DOC_DF).select(
-        "doc_id", "kept_frac"
+    pairs, pins = ngram_jaccard_pairs(
+        docs, "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
+    comp = connected_components(pairs.select("a_id", "b_id"), "a_id", "b_id")
+    bp, bp_pins = boilerplate_filter(
+        docs, "doc_id", "text", SEGMENT_TOKENS, _BP_MAX_DOC_DF
+    )
+    bp = bp.select("doc_id", "kept_frac")
     staged = docs.select("doc_id", "text", tokenize(F.col("text")).alias("toks"))
     feats = quality_features(F.col("text"), F.col("toks"))
     qual = staged.select("doc_id", feats["quality_score"].alias("qs"))
@@ -5113,7 +5125,7 @@ def q137_drop_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(bp, "doc_id")
         .join(qual, "doc_id")
     )
-    return j.select(
+    res = j.select(
         "doc_id",
         F.when(~F.col("is_first"), F.lit("exact_dup"))
         .when(
@@ -5125,6 +5137,7 @@ def q137_drop_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("kept"))
         .alias("reason"),
     )
+    return materialize_release(res, *pins, *bp_pins)
 
 
 Q137_SQL = f"""
@@ -5907,18 +5920,17 @@ def q146_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     t = load_tables(spark, sf_dir)
-    _pins: list = []
     # The pair table feeds TWO aggregations (pair_agg + doc_agg); without a
     # pin the whole postings-join subtree above the operator's internal
     # index cache — pair explode, n_inter groupBy, both size joins — ran
     # once per consumer (r13 optimization, guide §5: persist only what is
     # reused AND expensive to recompute). The pair table itself is
     # threshold-filtered and tiny relative to the corpus at any scale.
-    pairs = ngram_jaccard_pairs(
+    pairs, pins = ngram_jaccard_pairs(
         t["documents"], "doc_id", "text",
-        threshold=min(_SWEEP_THRESHOLDS), max_df=_J_MAX_DF, pins=_pins,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _pins.append(pairs)
+        threshold=min(_SWEEP_THRESHOLDS), max_df=_J_MAX_DF,
+    )
+    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     thr = F.explode(
         F.array(*[F.lit(float(x)) for x in _SWEEP_THRESHOLDS])
     ).alias("threshold")
@@ -5945,7 +5957,8 @@ def q146_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_docs_involved",
             "mean_jaccard",
         ),
-        *_pins,
+        pairs,
+        *pins,
     )
 
 
@@ -6305,15 +6318,10 @@ def q151_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.col("text")).alias("dg"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     keeper = d.groupBy("dg").agg(F.min("doc_id").alias("keeper_id"))
-    _pins: list = []
-    comp = connected_components(
-        ngram_jaccard_pairs(
-            t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF,
-            pins=_pins,
-        ),
-        "a_id",
-        "b_id",
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
+    comp = connected_components(pairs, "a_id", "b_id")
     lab = d.join(comp, d["doc_id"] == comp["node"], "left").select(
         d["doc_id"],
         "source",
@@ -6334,7 +6342,7 @@ def q151_effective_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "n_docs", "toks_total", "toks_exact_dedup", "toks_neardup_dedup"),
         d,
         lab,
-        *_pins,
+        *pins,
     )
 
 
@@ -6643,7 +6651,7 @@ def q155_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size.
     """
     t = load_tables(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(
+    pairs, pins = ngram_jaccard_pairs(
         t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
     # ONE evaluation of the pair pipeline: a unionAll of two projections
@@ -6654,11 +6662,12 @@ def q155_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emits both endpoints from a single pass instead.
     nodes = pairs.select(F.explode(F.array("a_id", "b_id")).alias("node"))
     deg = nodes.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
-    return (
+    res = (
         deg.groupBy("degree")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
         .select("degree", "n_docs")
     )
+    return materialize_release(res, *pins)
 
 
 Q155_SQL = f"""
@@ -6706,15 +6715,10 @@ def q156_quality_dup_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.md5("text").alias("dg"), feats["quality_score"].alias("q")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     digests = scored.groupBy("dg").agg(F.count(F.lit(1)).alias("n_copies"))
-    _pins: list = []
-    comp = connected_components(
-        ngram_jaccard_pairs(
-            t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF,
-            pins=_pins,
-        ),
-        "a_id",
-        "b_id",
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
+    comp = connected_components(pairs, "a_id", "b_id")
     j = (
         scored.join(digests, "dg")
         .join(comp, scored["doc_id"] == comp["node"], "left")
@@ -6731,7 +6735,7 @@ def q156_quality_dup_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
         .select("quality_bucket", "dup_class", "n_docs"),
         scored,
-        *_pins,
+        *pins,
     )
 
 
@@ -7557,21 +7561,19 @@ def q170_cluster_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
     t = load_tables(spark, sf_dir)
-    comp = connected_components(
-        ngram_jaccard_pairs(
-            t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
-        ),
-        "a_id",
-        "b_id",
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
+    comp = connected_components(pairs, "a_id", "b_id")
     meta = t["documents"].select("doc_id", "source", "lang")
     j = comp.join(meta, comp["node"] == meta["doc_id"])
-    return j.groupBy("component").agg(
+    res = j.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.count_distinct("source").cast("bigint").alias("n_sources"),
         F.count_distinct("lang").cast("bigint").alias("n_langs"),
         F.min("node").alias("keeper_id"),
     )
+    return materialize_release(res, *pins)
 
 
 Q170_SQL = f"""
@@ -8201,11 +8203,11 @@ def q180_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared_digests"))
     )
     src = t["documents"].select("doc_id", "source")
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
+    )
     np_ = (
-        ngram_jaccard_pairs(
-            t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
-        )
-        .join(src.select(F.col("doc_id").alias("a_id"), F.col("source").alias("sa")), "a_id")
+        pairs.join(src.select(F.col("doc_id").alias("a_id"), F.col("source").alias("sa")), "a_id")
         .join(src.select(F.col("doc_id").alias("b_id"), F.col("source").alias("sb")), "b_id")
         .filter(F.col("sa") != F.col("sb"))
         .select(
@@ -8215,7 +8217,7 @@ def q180_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src_a", "src_b")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_near_pairs"))
     )
-    return (
+    res = (
         expairs.join(np_, ["src_a", "src_b"], "full_outer")
         .select(
             "src_a",
@@ -8228,6 +8230,7 @@ def q180_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
+    return materialize_release(res, *pins)
 
 
 def _q180_sql() -> str:
@@ -8377,7 +8380,7 @@ def q182_band_config_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import ngram_jaccard_pairs
 
     t = load_tables(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(
+    pairs, pins = ngram_jaccard_pairs(
         t["documents"], "doc_id", "text", threshold=0.5, max_df=_J_MAX_DF
     )
     j = F.col("jaccard")
@@ -8392,7 +8395,7 @@ def q182_band_config_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{b}, {r}, coalesce(s_{b}_{r}, CAST(0.0 AS DOUBLE))"
         for b, r in _BAND_CONFIGS
     )
-    return row.select(
+    res = row.select(
         F.col("n_pairs"),
         F.expr(
             f"stack({len(_BAND_CONFIGS)}, {stack_args})"
@@ -8411,6 +8414,7 @@ def q182_band_config_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("expected_recall"),
     )
+    return materialize_release(res, *pins)
 
 
 def _q182_sql() -> str:
@@ -8468,10 +8472,8 @@ def q183_shard_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "shard_id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    _pins: list = []
-    pairs = ngram_jaccard_pairs(
-        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF,
-        pins=_pins,
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
     res = (
         pairs.join(
@@ -8493,7 +8495,7 @@ def q183_shard_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("mean_jaccard"),
         )
     )
-    return materialize_release(res, shards, *_pins)
+    return materialize_release(res, shards, *pins)
 
 
 Q183_SQL = f"""
@@ -9261,14 +9263,8 @@ def q195_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import ngram_containment_pairs
 
     t = load_tables(spark, sf_dir)
-    pins: list = []
-    pairs = ngram_containment_pairs(
-        t["documents"],
-        "doc_id",
-        "text",
-        threshold=_CONTAIN_T,
-        max_df=_J_MAX_DF,
-        pins=pins,
+    pairs, pins = ngram_containment_pairs(
+        t["documents"], "doc_id", "text", threshold=_CONTAIN_T, max_df=_J_MAX_DF
     )
     res = pairs.select(
         "a_id",
@@ -9352,15 +9348,8 @@ def q196_ivf_probe_sweep(
     ex = cosine_topk_bruteforce(
         emb, "vec_id", "embedding", k=3, max_n=None, queries=qset
     )
-    pins: list = []
-    sw = ivf_probe_sweep(
-        emb,
-        "vec_id",
-        "embedding",
-        k=3,
-        n_centroids=_IVF_C,
-        probes=_PROBE_SWEEP,
-        pins=pins,
+    sw, pins = ivf_probe_sweep(
+        emb, "vec_id", "embedding", k=3, n_centroids=_IVF_C, probes=_PROBE_SWEEP
     )
     if gate is not None:
         sw = sw.filter(md5_sample_gate(F.col("vec_id"), sample_frac, salt="ivfsweep"))
@@ -9514,10 +9503,11 @@ def q198_snapshot_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1000000).alias("doc_id"),
         F.concat(F.lit("new revision of "), F.col("text")).alias("text"),
     )
-    pairs = ngram_jaccard_cross(
+    pairs, pins = ngram_jaccard_cross(
         base, new_docs, "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
-    return pairs.select("a_id", "b_id", F.round("jaccard", 9).alias("jaccard"))
+    res = pairs.select("a_id", "b_id", F.round("jaccard", 9).alias("jaccard"))
+    return materialize_release(res, *pins)
 
 
 Q198_SQL = rf"""
@@ -9754,14 +9744,8 @@ def q201_source_containment_matrix(spark: SparkSession, sf_dir: str) -> DataFram
     from ..operators.dedup import ngram_containment_pairs
 
     t = load_tables(spark, sf_dir)
-    pins: list = []
-    pairs = ngram_containment_pairs(
-        t["documents"],
-        "doc_id",
-        "text",
-        threshold=_CONTAIN_T,
-        max_df=_J_MAX_DF,
-        pins=pins,
+    pairs, pins = ngram_containment_pairs(
+        t["documents"], "doc_id", "text", threshold=_CONTAIN_T, max_df=_J_MAX_DF
     )
     src = t["documents"].select("doc_id", "source")
     j = (
@@ -9909,11 +9893,10 @@ def q203_component_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
     t = load_tables(spark, sf_dir)
-    _pins: list = []
-    pairs = ngram_jaccard_pairs(
-        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF,
-        pins=_pins,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
+    )
+    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     comp = connected_components(pairs, "a_id", "b_id")
     members = comp.groupBy("component").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_members")
@@ -9945,7 +9928,7 @@ def q203_component_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("density"),
     )
-    return materialize_release(res, pairs, *_pins)
+    return materialize_release(res, pairs, *pins)
 
 
 Q203_SQL = f"""
@@ -9990,22 +9973,24 @@ def q210_lsh_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = minhash_lsh_pairs(
         t["documents"], "doc_id", "text", k=_MH_K, bands=_MH_BANDS
     ).select("a_id", "b_id", F.lit(1).alias("_c"))
-    truth = ngram_jaccard_pairs(
+    truth, pins = ngram_jaccard_pairs(
         t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
-    ).select("a_id", "b_id", F.lit(1).alias("_t"))
+    )
+    truth = truth.select("a_id", "b_id", F.lit(1).alias("_t"))
     j = cand.join(truth, ["a_id", "b_id"], "full_outer")
     n_c = F.sum(F.coalesce(F.col("_c"), F.lit(0))).cast("bigint")
     n_t = F.sum(F.coalesce(F.col("_t"), F.lit(0))).cast("bigint")
     n_h = F.sum(
         F.when(F.col("_c").isNotNull() & F.col("_t").isNotNull(), 1).otherwise(0)
     ).cast("bigint")
-    return j.agg(
+    res = j.agg(
         n_c.alias("n_candidates"),
         n_t.alias("n_truth"),
         n_h.alias("n_hits"),
         F.round(n_h.cast("double") / n_c.cast("double"), 9).alias("precision"),
         F.round(n_h.cast("double") / n_t.cast("double"), 9).alias("recall"),
     )
+    return materialize_release(res, *pins)
 
 
 Q210_SQL = f"""
@@ -10052,15 +10037,10 @@ def q212_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
     t = load_tables(spark, sf_dir)
-    _pins: list = []
-    e = (
-        ngram_jaccard_pairs(
-            t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF,
-            pins=_pins,
-        )
-        .select("a_id", "b_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
+    e = pairs.select("a_id", "b_id").persist(StorageLevel.MEMORY_AND_DISK)
     # wedge (a<b) + (b<c) → probe the closing (a<c) edge
     ab = e.select(F.col("a_id").alias("a"), F.col("b_id").alias("b"))
     bc = e.select(F.col("a_id").alias("b"), F.col("b_id").alias("c"))
@@ -10072,7 +10052,7 @@ def q212_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("component")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
     )
-    return materialize_release(res, e, *_pins)
+    return materialize_release(res, e, *pins)
 
 
 Q212_SQL = f"""
@@ -10110,15 +10090,10 @@ def q215_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.components import connected_components
 
     t = load_tables(spark, sf_dir)
-    _pins: list = []
-    e = (
-        ngram_jaccard_pairs(
-            t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF,
-            pins=_pins,
-        )
-        .select("a_id", "b_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
+    e = pairs.select("a_id", "b_id").persist(StorageLevel.MEMORY_AND_DISK)
     comp = connected_components(e, "a_id", "b_id")
     deg = (
         e.select(F.explode(F.array("a_id", "b_id")).alias("node"))
@@ -10159,7 +10134,7 @@ def q215_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("coeff"),
         )
     )
-    return materialize_release(res, e, *_pins)
+    return materialize_release(res, e, *pins)
 
 
 Q215_SQL = f"""
@@ -10621,15 +10596,10 @@ def q227_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     t = load_tables(spark, sf_dir)
-    pins: list = []
-    pairs = (
-        ngram_jaccard_pairs(
-            t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF,
-            pins=pins,
-        )
-        .select("a_id", "b_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
+    pairs = pairs.select("a_id", "b_id").persist(StorageLevel.MEMORY_AND_DISK)
     deg = (
         pairs.select(F.col("a_id").alias("node"))
         .unionAll(pairs.select(F.col("b_id").alias("node")))
@@ -10980,16 +10950,10 @@ def q240_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..execution import loop_execution
 
     t = load_tables(spark, sf_dir)
-    pins: list = []
-    edges = (
-        ngram_jaccard_pairs(
-            t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF,
-            pins=pins,
-        )
-        .select("a_id", "b_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
-    pins.append(edges)
+    edges = pairs.select("a_id", "b_id").persist(StorageLevel.MEMORY_AND_DISK)
     # Lazy cut + sizing count in ONE job (r14 — the components.py edge-cut
     # idiom): the count below is the checkpoint's materializing action.
     rounds = [edges.localCheckpoint(eager=False)]
@@ -11036,7 +11000,7 @@ def q240_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("deg_in_core"))
     )
     res = final_deg.join(F.broadcast(conv)).select("node", "deg_in_core", "converged")
-    return materialize_release(res, *pins)
+    return materialize_release(res, edges, *pins)
 
 
 def _sql_kcore_round(prev: str, out: str) -> str:
@@ -11109,15 +11073,10 @@ def q242_lang_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..execution import posture_tail
 
     t = load_tables(spark, sf_dir)
-    _pins: list = []
-    e = (
-        ngram_jaccard_pairs(
-            t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF,
-            pins=_pins,
-        )
-        .select("a_id", "b_id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    pairs, pins = ngram_jaccard_pairs(
+        t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
+    e = pairs.select("a_id", "b_id").persist(StorageLevel.MEMORY_AND_DISK)
 
     def _rounds(loop_parts):
         und = (
@@ -11172,7 +11131,7 @@ def q242_lang_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-sorted on the join key — at any scale the graph is exchanged
     # once, not once per round. The node-scale slim result is
     # checkpointed inside the posture (the CC label-checkpoint class).
-    return posture_tail(spark, 2 * e.count(), _rounds, pins=[e, *_pins])
+    return posture_tail(spark, 2 * e.count(), _rounds, pins=[e, *pins])
 
 
 Q242_SQL = f"""
@@ -13028,9 +12987,10 @@ def q255_exactsubstr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import exactsubstr_excise
 
     t = load_tables(spark, sf_dir)
-    return exactsubstr_excise(
+    docs, pins = exactsubstr_excise(
         t["documents"], "doc_id", "text", k=_XS_K, min_docs=_XS_MIN_DOCS
     )
+    return materialize_release(docs, *pins)
 
 
 Q255_SQL = rf"""

@@ -1048,7 +1048,7 @@ def attribution_sink(
     """foreachBatch sink: incrementally-maintained Markov removal-effect
     attribution — the streaming twin of q263 (plans/relational.py),
     sharing its chain solve verbatim via
-    `operators/attribution.py::attribution_table`. Journeys span
+    `operators/attribution.py::attribution_frames`. Journeys span
     micro-batches: a per-user JOURNEY-STATE store (last node seen,
     converted flag) lets each batch contribute exactly its own
     transitions — the cross-batch edge (state.last_node → first batch
@@ -1380,10 +1380,9 @@ def attribution_sink(
             .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
             .select("prev", F.lit(ATTR_LOST).alias("nxt"), "n")
         )
-        # attribution_frames, not attribution_table: the sink runs on a
-        # streaming thread, and the deferred-pin ledger is thread-scoped
-        # (query-at-a-time); the write materializes the result here, so
-        # the pins release immediately after
+        # The sink runs on a streaming thread, and the deferred-pin ledger
+        # is thread-scoped (query-at-a-time); the write materializes the
+        # result here, so the pins release immediately after
         res, pins = attribution_frames(all_trans.unionByName(lost))
         res.write.mode("overwrite").parquet(f"{out_dir}/current")
         for fr in pins:

@@ -318,7 +318,7 @@ def main() -> None:
     # CC telemetry on the two pair graphs (rounds-to-converge, edge counts,
     # cluster counts) — the numbers that show convergence stays O(log) and
     # pair generation stays linear-in-clone-factor under 10-way duplication.
-    jac_pairs = ngram_jaccard_pairs(
+    jac_pairs, jac_pins = ngram_jaccard_pairs(
         t["documents"], "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
     )
     stats: dict = {}
@@ -330,9 +330,11 @@ def main() -> None:
         "clusters": comp.select("component").distinct().count(),
         "clustered_docs": comp.count(),
     }
+    for p in jac_pins:
+        p.unpersist()
     print(f"# cc/jaccard: {out['cc']['jaccard']}", file=sys.stderr)
 
-    lsh_pairs = sign_lsh_pairs(
+    lsh_pairs, lsh_pins = sign_lsh_pairs(
         t["embeddings"], "vec_id", "embedding", bits=_LSH_BITS, min_cos=_EDUP_MIN_COS
     )
     stats2: dict = {}
@@ -344,6 +346,8 @@ def main() -> None:
         "clusters": comp2.select("component").distinct().count(),
         "clustered_vecs": comp2.count(),
     }
+    for p in lsh_pins:
+        p.unpersist()
     print(f"# cc/embedding: {out['cc']['embedding']}", file=sys.stderr)
 
     # SemDeDup at its SCALE posture: k = √n (not the oracle-pinned k=8 of

@@ -48,6 +48,17 @@ def count_jobs(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def collect_released(result):
+    """Collect a lazy operator's ``(frame, pins)`` result, then unpersist
+    the pins, as a query's ``materialize_release`` would."""
+    frame, pins = result
+    try:
+        return frame.collect()
+    finally:
+        for p in pins:
+            p.unpersist()
+
+
 def count_round_trips(fn):
     """Run ``fn``; return its result and the number of py4j commands this
     thread sent the JVM meanwhile. py4j's finalizer thread, which frees

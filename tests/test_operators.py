@@ -22,6 +22,8 @@ from printer_etl_hub_spark.operators import (
 from printer_etl_hub_spark.operators.multimodal import decode_media, frame_sample
 from printer_etl_hub_spark.sources.fetch import fetch_stage
 
+from conftest import collect_released
+
 
 def test_varbind_pivot(spark):
     rows = [(1, 5, "3"), (1, 9, "42"), (2, 5, "3"), (2, 9, "77")]
@@ -76,7 +78,7 @@ DOCS = [
 
 def test_minhash_and_jaccard(spark):
     df = spark.createDataFrame(DOCS, "doc_id int, text string")
-    jac = ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5).collect()
+    jac = collect_released(ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5))
     assert [(r["a_id"], r["b_id"]) for r in jac] == [(1, 2)]
     mh = minhash_lsh_pairs(df, "doc_id", "text", k=12, bands=4).collect()
     assert (1, 2) in {(r["a_id"], r["b_id"]) for r in mh}
@@ -102,7 +104,9 @@ def test_cosine_topk_and_lsh(spark):
     tk = cosine_topk_bruteforce(df, "vec_id", "embedding", k=1).collect()
     nn = {r["vec_id"]: r["neighbor_id"] for r in tk}
     assert nn[1] == 2 and nn[2] == 1 and nn[3] == 4 and nn[4] == 3
-    pairs = sign_lsh_pairs(df, "vec_id", "embedding", bits=4, min_cos=0.8).collect()
+    pairs = collect_released(
+        sign_lsh_pairs(df, "vec_id", "embedding", bits=4, min_cos=0.8)
+    )
     got = {(r["a_id"], r["b_id"]) for r in pairs}
     assert (1, 2) in got and (3, 4) in got
 
@@ -125,13 +129,15 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
     }
     ivf = {
         (r["vec_id"], r["rn"]): r["neighbor_id"]
-        for r in ivf_topk(df, "vec_id", "embedding", k=2, n_centroids=4, n_probe=4).collect()
+        for r in collect_released(
+            ivf_topk(df, "vec_id", "embedding", k=2, n_centroids=4, n_probe=4)
+        )
     }
     # full-probe IVF == exact
     assert ivf == bf
     # restricted probe still finds within-cluster neighbors
     ivf1 = ivf_topk(df, "vec_id", "embedding", k=1, n_centroids=2, n_probe=1)
-    for r in ivf1.collect():
+    for r in collect_released(ivf1):
         assert r["vec_id"] % 2 == r["neighbor_id"] % 2
 
 
@@ -250,7 +256,7 @@ def test_harvest_json_discovers_nested_leaves(spark):
     )
     got = {
         (r.id, r.path, r.vtype, r.val)
-        for r in harvest_json(df, "payload", ("id",), max_depth=4).collect()
+        for r in collect_released(harvest_json(df, "payload", ("id",), max_depth=4))
     }
     assert (1, "severity", "STRING", "critical") in got
     assert (1, "meta.code", "STRING", "E4-100") in got
@@ -262,10 +268,12 @@ def test_harvest_json_discovers_nested_leaves(spark):
     # F27 key-family filter: severity/code/desc substring match on leaf key
     fam = {
         r.path
-        for r in harvest_json(
-            df, "payload", ("id",), max_depth=4,
-            key_substrings=("severity", "code", "desc"),
-        ).collect()
+        for r in collect_released(
+            harvest_json(
+                df, "payload", ("id",), max_depth=4,
+                key_substrings=("severity", "code", "desc"),
+            )
+        )
     }
     assert fam == {"severity", "meta.code", "arr[0].desc"}
 
@@ -497,7 +505,9 @@ def test_ivf_topk_accepts_trained_centroids(spark):
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     cents = kmeans_fit(df, "vec_id", "embedding", k=4, max_iter=5)
     out = ivf_topk(df, "vec_id", "embedding", k=2, n_probe=2, centroids=cents)
-    top1 = {r.vec_id: (r.neighbor_id, r.cos_sim) for r in out.collect() if r.rn == 1}
+    top1 = {
+        r.vec_id: (r.neighbor_id, r.cos_sim) for r in collect_released(out) if r.rn == 1
+    }
     assert len(top1) == 60
     for vid, (nid, cos) in top1.items():
         twin = vid + 100 if vid < 100 else vid - 100
@@ -757,7 +767,9 @@ def test_exactsubstr_excise_semantics(spark):
     df = spark.createDataFrame(docs, "doc_id int, text string")
     got = {
         r.doc_id: r
-        for r in exactsubstr_excise(df, "doc_id", "text", k=4, min_docs=2).collect()
+        for r in collect_released(
+            exactsubstr_excise(df, "doc_id", "text", k=4, min_docs=2)
+        )
     }
     assert len(got) == 6  # one row per doc, always
     assert got[1].kept_text == "one two three four five"
@@ -879,8 +891,12 @@ def test_leakage_safe_split_reuses_precomputed_components(spark):
     from printer_etl_hub_spark.tables import load_tables
 
     docs = load_tables(spark, "/root/testdata/sf0.001")["documents"]
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF)
+    pairs, pins = ngram_jaccard_pairs(
+        docs, "doc_id", "text", threshold=0.8, max_df=_J_MAX_DF
+    )
     comp = connected_components(pairs, "a_id", "b_id")
+    for p in pins:
+        p.unpersist()
     fed = {
         (r.doc_id, r.group_id, r.split)
         for r in leakage_safe_split(docs, components=comp).collect()
@@ -942,7 +958,7 @@ def test_boilerplate_filter_drops_common_spans_everywhere(spark):
     df = spark.createDataFrame(rows, "doc_id int, text string")
     out = {
         r.doc_id: r
-        for r in boilerplate_filter(df, "doc_id", "text", 10, 2).collect()
+        for r in collect_released(boilerplate_filter(df, "doc_id", "text", 10, 2))
     }
     assert len(out) == 4
     for d in (1, 2, 3):
@@ -1035,7 +1051,9 @@ def test_ngram_containment_asymmetric_quote_inclusion(spark):
     df = spark.createDataFrame(
         [(1, short), (2, long_doc)], "doc_id long, text string"
     )
-    rows = ngram_containment_pairs(df, "doc_id", "text", threshold=0.9).collect()
+    rows = collect_released(
+        ngram_containment_pairs(df, "doc_id", "text", threshold=0.9)
+    )
     assert len(rows) == 1
     r = rows[0]
     assert (r.a_id, r.b_id) == (1, 2)
@@ -1045,7 +1063,7 @@ def test_ngram_containment_asymmetric_quote_inclusion(spark):
     assert r.jaccard < 0.1
     # the same pair is invisible to the symmetric detector at any
     # comparable threshold
-    assert ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5).count() == 0
+    assert collect_released(ngram_jaccard_pairs(df, "doc_id", "text", threshold=0.5)) == []
 
 
 def test_ivf_probe_sweep_matches_ivf_topk_and_is_monotone(spark):
@@ -1058,7 +1076,7 @@ def test_ivf_probe_sweep_matches_ivf_topk_and_is_monotone(spark):
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         .limit(200)
     )
-    sweep = ivf_probe_sweep(
+    sweep, pins = ivf_probe_sweep(
         df, "vec_id", "embedding", k=3, n_centroids=8, probes=(1, 2, 4)
     )
     got = {
@@ -1067,12 +1085,14 @@ def test_ivf_probe_sweep_matches_ivf_topk_and_is_monotone(spark):
             (p, sweep.filter(F.col("n_probe") == p).collect()) for p in (1, 2, 4)
         )
     }
+    for pin in pins:
+        pin.unpersist()
     for p in (1, 2, 4):
         ref = {
             (r.vec_id, r.neighbor_id, r.rn)
-            for r in ivf_topk(
-                df, "vec_id", "embedding", k=3, n_centroids=8, n_probe=p
-            ).collect()
+            for r in collect_released(
+                ivf_topk(df, "vec_id", "embedding", k=3, n_centroids=8, n_probe=p)
+            )
         }
         assert got[p] == ref, f"sweep level {p} diverges from ivf_topk"
 
@@ -1081,7 +1101,7 @@ def test_attribution_solve_matches_duckdb_on_random_chains(spark):
     """Property gate for the pandas chain solve (`_solve_chain`): on 12
     seeded RANDOM transition-count frames — varying channel counts,
     sparsity, a conversion-free chain (the ANSI NULL degenerate), and
-    count magnitudes up to 10^9 — `attribution_table` must equal the
+    count magnitudes up to 10^9 — `attribution_frames` must equal the
     UNROLLED DuckDB oracle (`plans/relational.py::_attr_chain_sql`, the
     exact SQL tail q263's gate runs) cell-for-cell. This is what lets
     the solve run imperatively per chain: the DECIMAL(38,18) replication
@@ -1093,7 +1113,7 @@ def test_attribution_solve_matches_duckdb_on_random_chains(spark):
     import duckdb
     import pandas as pd
 
-    from printer_etl_hub_spark.operators.attribution import attribution_table
+    from printer_etl_hub_spark.operators.attribution import attribution_frames
     from printer_etl_hub_spark.plans.relational import _attr_chain_sql
 
     def cells_equal(a, b):
@@ -1124,12 +1144,10 @@ def test_attribution_solve_matches_duckdb_on_random_chains(spark):
         rows = [(p, n, c) for (p, n), c in rows]
         pdf = pd.DataFrame(rows, columns=["prev", "nxt", "n"])
         trans = spark.createDataFrame(pdf.astype({"n": "int64"}))
-        got = (
-            attribution_table(trans)
-            .toPandas()
-            .sort_values("channel")
-            .reset_index(drop=True)
-        )
+        res, pins = attribution_frames(trans)
+        got = res.toPandas().sort_values("channel").reset_index(drop=True)
+        for p in pins:
+            p.unpersist()
         con.register("trans_tbl", pdf)
         want = con.execute(
             "WITH trans AS (SELECT * FROM trans_tbl),\n" + _attr_chain_sql()

@@ -355,47 +355,13 @@ def test_no_unintended_nested_loop_joins(registry_plans):
     assert not bad, f"BNLJ count drift (got, whitelisted): {bad}"
 
 
-#: Queries that build a cached frame they never release: still cached
-#: after the query's deferred pins are flushed. ngram_jaccard_pairs'
-#: shingle cache and inverted index (operators/dedup.py) account for the
-#: near-dup family; q71 leaks its variant-explode level caches. Keep this
-#: list exact: a fixed query leaves it, and a new leak fails the walk.
-PIN_LEAKS_ALLOWED = {
-    "q29_ngram_jaccard",
-    "q32_embedding_lsh",
-    "q38_ivf_topk",
-    "q71_json_harvest",
-    "q72_dup_clusters",
-    "q78_decontamination",
-    "q82_embedding_dedup",
-    "q102_leakage_safe_split",
-    "q114_ann_recall",
-    "q121_boilerplate_filter",
-    "q126_lsh_recall",
-    "q131_winnow_matches",
-    "q135_quality_keeper",
-    "q137_drop_ledger",
-    "q155_degree_histogram",
-    "q170_cluster_spread",
-    "q180_source_dup_matrix",
-    "q182_band_config_sweep",
-    "q186_dup_cluster_sizes",
-    "q198_snapshot_neardup",
-    "q210_lsh_pr",
-    "q219_neardup_survivorship",
-    "q255_exactsubstr",
-}
-
-
-def test_registry_pin_leaks_are_the_known_ones(registry_plans):
+def test_registry_leaks_no_pins(registry_plans):
     """Cache pins are released on every exit path: once a query's
-    deferred pins are flushed, nothing it persisted may stay cached,
-    apart from the known leaks listed above."""
-    leaking = {name for name, f in registry_plans.items() if f["pin_leak"]}
-    assert leaking == PIN_LEAKS_ALLOWED, (
-        f"new leaks: {sorted(leaking - PIN_LEAKS_ALLOWED)}; "
-        f"fixed, drop from the list: {sorted(PIN_LEAKS_ALLOWED - leaking)}"
-    )
+    deferred pins are flushed, nothing it persisted may stay cached. A
+    query that composes a persisting operator must return through
+    ``materialize_release`` (the pin rule, plans/common.py)."""
+    leaking = sorted(name for name, f in registry_plans.items() if f["pin_leak"])
+    assert not leaking, f"queries leaving a cached frame behind: {leaking}"
 
 
 def test_q240_core_nonempty_at_gate_sfs(spark):
@@ -626,7 +592,9 @@ def test_q196_sweep_single_assignment_and_scoring(spark):
 
     spark.catalog.clearCache()
     df = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
-    out = ivf_probe_sweep(df, "vec_id", "embedding", k=3, n_centroids=8, probes=(1, 2))
+    out, pins = ivf_probe_sweep(
+        df, "vec_id", "embedding", k=3, n_centroids=8, probes=(1, 2)
+    )
     out.collect()
     final = (
         out._jdf.queryExecution().executedPlan().toString()
@@ -641,6 +609,8 @@ def test_q196_sweep_single_assignment_and_scoring(spark):
     # the base scan feeds the persisted assignment; the centroid limit
     # and both join sides read the cache — nothing re-reads the parquet
     assert final.count("Scan parquet") <= 2, final[:3000]
+    for p in pins:
+        p.unpersist()
 
 
 def test_q277_deadline_funnel_max_over_starts_beats_greedy(spark, tmp_path):

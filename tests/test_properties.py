@@ -8,6 +8,7 @@ from __future__ import annotations
 import re
 from contextlib import contextmanager
 
+import pytest
 from pyspark.sql import functions as F
 
 from printer_etl_hub_spark.functions.normalize import (
@@ -17,6 +18,8 @@ from printer_etl_hub_spark.functions.normalize import (
     norm_ws,
     safe_bigint,
 )
+
+from conftest import collect_released
 
 CASES = [
     "",
@@ -549,7 +552,9 @@ def test_containment_pairs_invariants(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r.a_id, r.b_id): r
-        for r in ngram_containment_pairs(df, "doc_id", "text", threshold=0.5).collect()
+        for r in collect_released(
+            ngram_containment_pairs(df, "doc_id", "text", threshold=0.5)
+        )
     }
     for r in got.values():
         assert 0.0 < r.c_a_in_b <= 1.0 and 0.0 < r.c_b_in_a <= 1.0
@@ -659,29 +664,86 @@ def test_pending_release_ledger_is_single_threaded(spark):
     df.unpersist()
 
 
-def test_pair_operators_route_pins_to_caller(spark):
-    """The pair/sweep operators' ``pins`` out-param (ADVICE r7): every
-    internally persisted frame is surfaced to the caller so plan-level
-    code can defer-release it through materialize_release."""
-    from printer_etl_hub_spark.operators.dedup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g"), (2, "a b c d e f g"), (3, "x y z w q r s")],
+def _pin_docs(spark):
+    return spark.createDataFrame(
+        [
+            (1, "a b c d e f g h i j"),
+            (2, "a b c d e f g h i j"),
+            (3, "x y z w q r s t u v"),
+            (4, "a b c d e x y z w q"),
+        ],
         "doc_id long, text string",
     )
-    pins: list = []
-    ngram_jaccard_pairs(docs, "doc_id", "text", pins=pins).collect()
-    assert len(pins) == 2 and all(p.is_cached for p in pins)
+
+
+def _pin_vecs(spark):
+    rows = [(i, [float((i * 7 + j) % 5) - 2.0 for j in range(4)]) for i in range(12)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _pin_operators():
+    """Every lazy operator that persists a frame its result still reads,
+    called with arguments that take its persisting path."""
+    from printer_etl_hub_spark.operators import dedup, harvest, similarity
+
+    def cross(s):
+        d = _pin_docs(s)
+        return dedup.ngram_jaccard_cross(
+            d.filter("doc_id <= 2"), d.filter("doc_id > 2"), "doc_id", "text", max_df=3
+        )
+
+    def payloads(s):
+        return s.createDataFrame(
+            [(1, '{"a": {"b": 1}, "c": [2, {"d": "x"}]}'), (2, '{"e": 3}')],
+            "id long, payload string",
+        )
+
+    return {
+        "ngram_jaccard_pairs": lambda s: dedup.ngram_jaccard_pairs(
+            _pin_docs(s), "doc_id", "text"
+        ),
+        "ngram_containment_pairs": lambda s: dedup.ngram_containment_pairs(
+            _pin_docs(s), "doc_id", "text"
+        ),
+        "ngram_jaccard_cross": cross,
+        "boilerplate_filter": lambda s: dedup.boilerplate_filter(
+            _pin_docs(s), "doc_id", "text", 5, 1
+        ),
+        "exactsubstr_excise": lambda s: dedup.exactsubstr_excise(
+            _pin_docs(s), "doc_id", "text", k=4
+        ),
+        "winnow_match_pairs": lambda s: dedup.winnow_match_pairs(
+            _pin_docs(s), "doc_id", "text", k=4, w=2, max_bucket=3
+        ),
+        "sign_lsh_pairs": lambda s: similarity.sign_lsh_pairs(
+            _pin_vecs(s), "vec_id", "embedding", bits=2, min_cos=0.5
+        ),
+        "ivf_topk": lambda s: similarity.ivf_topk(
+            _pin_vecs(s), "vec_id", "embedding", k=2, n_centroids=3
+        ),
+        "ivf_probe_sweep": lambda s: similarity.ivf_probe_sweep(
+            _pin_vecs(s), "vec_id", "embedding", k=2, n_centroids=3, probes=(1, 2)
+        ),
+        "harvest_json": lambda s: harvest.harvest_json(
+            payloads(s), "payload", ("id",), max_depth=3
+        ),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_pin_operators()))
+def test_operator_returns_every_pin(spark, op):
+    """The pin rule (plans/common.py::materialize_release): a lazy
+    operator returns ``(frame, pins)`` and ``pins`` is everything it
+    cached. Once the caller's action has run and the pins are
+    unpersisted, the session's cache is empty."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    frame, pins = _pin_operators()[op](spark)
+    frame.collect()
+    assert pins and all(p.is_cached for p in pins)
     for p in pins:
         p.unpersist()
-    pins2: list = []
-    ngram_containment_pairs(docs, "doc_id", "text", pins=pins2).collect()
-    assert len(pins2) == 2 and all(p.is_cached for p in pins2)
-    for p in pins2:
-        p.unpersist()
+    assert cache.isEmpty()
 
 
 def test_dist_cumsum_matches_sequential_prefix_sum(spark):

@@ -26,7 +26,7 @@ from printer_etl_hub_spark.streaming.windows import (
 )
 from printer_etl_hub_spark.tables import load_tables
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, collect_released
 
 
 @pytest.fixture(scope="module")
@@ -812,9 +812,9 @@ def test_winnow_ingest_sink_stream_equals_batch(spark, tmp_path):
     }
     want_pairs = {
         (r.a_id, r.b_id, r.n_shared)
-        for r in winnow_match_pairs(
-            docs, "doc_id", "text", k=8, w=4, min_shared=2
-        ).collect()
+        for r in collect_released(
+            winnow_match_pairs(docs, "doc_id", "text", k=8, w=4, min_shared=2)
+        )
     }
     assert got_pairs == want_pairs and want_pairs  # non-trivial corpus
 
@@ -891,9 +891,11 @@ def test_winnow_ingest_sink_capped_equals_batch_and_no_history_fanout(spark, tmp
     }
     want = {
         (r.a_id, r.b_id, r.n_shared)
-        for r in winnow_match_pairs(
-            docs, "doc_id", "text", k=8, w=4, min_shared=2, max_bucket=5
-        ).collect()
+        for r in collect_released(
+            winnow_match_pairs(
+                docs, "doc_id", "text", k=8, w=4, min_shared=2, max_bucket=5
+            )
+        )
     }
     assert got == want
     # the cold pair was found ACROSS batches (T1 in history, T2 later)
@@ -1544,7 +1546,7 @@ def test_exactsubstr_ingest_sink_stream_equals_batch(spark, tmp_path):
     }
     want = {
         (r.doc_id, r.n_tokens, r.n_dup_tokens, r.kept_frac, r.kept_text)
-        for r in exactsubstr_excise(docs, "doc_id", "text", k=k).collect()
+        for r in collect_released(exactsubstr_excise(docs, "doc_id", "text", k=k))
     }
     assert got == want
     # non-trivial: some documents actually lost spans
