@@ -29,9 +29,8 @@ ANALYSIS time (not execution — the cache serves reads) grows exponentially
 (measured: 0.5s → 3.5s → 27s → 159s per round on a 100-node chain).
 Checkpointing flattens the plan to a LogicalRDD each round — the same
 lineage-cut every iterative Spark algorithm (GraphX/GraphFrames) performs.
-localCheckpoint is executor-local (lost on executor failure); pass
-``checkpoint_dir=`` to use reliable ``checkpoint()`` on a real cluster when
-retry-safety across rounds matters more than speed.
+localCheckpoint is executor-local: an executor lost mid-loop loses the
+round's labels and fails the query.
 
 The round loop runs with AQE disabled and a shuffle width derived from the
 materialized edge count (both restored on exit): AQE turns every exchange
@@ -60,7 +59,6 @@ def connected_components(
     dst: str = "b_id",
     *,
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """Label every node of the pair graph with its component's minimum id.
@@ -68,47 +66,21 @@ def connected_components(
     Returns ``(node, component)`` for each node incident to an edge
     (singletons never enter the pair stream — callers keep them implicitly
     as their own component). Raises RuntimeError if ``max_iter`` rounds do
-    not converge (needs ~log2(diameter) + 2 rounds).
-
-    ``checkpoint_dir``: when set, per-round lineage cuts use RELIABLE
-    ``checkpoint()`` under that directory instead of executor-local
-    ``localCheckpoint()`` — survives executor loss, the right choice on a
-    real cluster where a retried task must not lose a round's labels.
-    Checkpoint data does NOT accumulate per round: each round writes to
-    its own subdirectory and the previous round's subdirectory is deleted
-    as soon as nothing references it (Spark itself only cleans checkpoints
-    with ``spark.cleaner.referenceTracking.cleanCheckpoints=true``, which
-    defaults to false). On return, ``cc-base`` (the edge input) and the
-    final round's subdirectory remain — delete ``checkpoint_dir`` when
-    done consuming the result. NOTE: ``setCheckpointDir`` is
-    SparkContext-GLOBAL; this call leaves it pointing into
-    ``checkpoint_dir``, so concurrent checkpoint users of the same context
-    should set their own dir. Default stays local (fastest, fine on local
-    mode / short jobs).
+    not converge (needs ~log2(diameter) + 2 rounds). Both id columns must
+    be bigint (the partition-local union-find and the exact DECIMAL sum
+    probe rely on it); any other type raises TypeError before any job.
 
     ``stats``: optional dict the call fills with convergence telemetry
     (``rounds`` = iterations executed, ``edges`` = symmetrized distinct
     edge count) — the observability hook the scale audit reads.
     """
-    sc = edges.sparkSession.sparkContext
-
-    def _rm(path_str: str) -> None:
-        jvm = edges.sparkSession._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path_str)
-        fs = p.getFileSystem(edges.sparkSession._jsc.hadoopConfiguration())
-        fs.delete(p, True)
-
-    def _cut(df: DataFrame, subdir: str = "cc-base", eager: bool = True) -> DataFrame:
-        if checkpoint_dir is not None:
-            # Reliable checkpoints stay EAGER even when the caller asks for
-            # lazy: a lazy reliable checkpoint is not persisted, so Spark
-            # recomputes the whole round to write the checkpoint files at
-            # the end of the first job that touches it — paying the round
-            # twice. localCheckpoint persists on first materialization, so
-            # lazy is free there.
-            sc.setCheckpointDir(f"{checkpoint_dir}/{subdir}")
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=eager)
+    edges = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    id_types = dict(edges.dtypes)
+    if set(id_types.values()) != {"bigint"}:
+        raise TypeError(
+            f"connected_components needs bigint ids; got {src}: "
+            f"{id_types['a']}, {dst}: {id_types['b']}"
+        )
 
     # Materialize the edge input ONCE before the symmetrization union — its
     # two branches would otherwise re-execute the caller's whole pair
@@ -116,11 +88,7 @@ def connected_components(
     # The cut is LAZY and the sizing count is its materializing action
     # (r14): an eager cut followed by a count paid two job submissions for
     # one materialization (the CC round idiom, applied to the edge cut).
-    # Reliable checkpoints stay eager inside _cut, where the count then
-    # reads the checkpoint files.
-    edges = _cut(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")), eager=False
-    )
+    edges = edges.localCheckpoint(eager=False)
     n_edges = edges.count()
     spark = edges.sparkSession
     # Round-loop execution posture (r13 optimization, guide §1.2/§2):
@@ -167,61 +135,51 @@ def connected_components(
         # satisfy exactly the loop's invariants (label(x) ≤ x, label(x)
         # in x's component), and the monotone Σ-probe argument below is
         # unchanged — any valid contraction start converges to the same
-        # component-min fixpoint. Non-bigint ids keep the identity init
-        # (every current caller is bigint; the probe's DECIMAL sum
-        # already requires numeric ids).
-        id_type = dict(edges.dtypes)["a"]
-        if id_type == "bigint":
+        # component-min fixpoint.
 
-            def _local_uf(batches):
-                import pandas as pd
+        def _local_uf(batches):
+            import pandas as pd
 
-                parent: dict = {}
+            parent: dict = {}
 
-                def find(x):
-                    r = x
-                    while parent.get(r, r) != r:
-                        r = parent[r]
-                    while parent.get(x, x) != x:
-                        parent[x], x = r, parent[x]
-                    return r
+            def find(x):
+                r = x
+                while parent.get(r, r) != r:
+                    r = parent[r]
+                while parent.get(x, x) != x:
+                    parent[x], x = r, parent[x]
+                return r
 
-                seen = set()
-                for pdf in batches:
-                    for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
-                        seen.add(a)
-                        seen.add(b)
-                        ra, rb = find(a), find(b)
-                        if ra == rb:
-                            continue
-                        if rb < ra:
-                            ra, rb = rb, ra
-                        parent[rb] = ra
-                nodes = sorted(seen)
-                yield pd.DataFrame(
-                    {"node": nodes, "component": [find(x) for x in nodes]}
-                )
-
-            init = (
-                edges.select("a", "b")
-                .mapInPandas(_local_uf, schema="node bigint, component bigint")
-                # a node seen by several partitions carries one candidate
-                # label per partition — fold to one row per node (min is
-                # a valid same-component contraction of contractions)
-                .groupBy("node")
-                .agg(F.min("component").alias("component"))
+            seen = set()
+            for pdf in batches:
+                for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
+                    seen.add(a)
+                    seen.add(b)
+                    ra, rb = find(a), find(b)
+                    if ra == rb:
+                        continue
+                    if rb < ra:
+                        ra, rb = rb, ra
+                    parent[rb] = ra
+            nodes = sorted(seen)
+            yield pd.DataFrame(
+                {"node": nodes, "component": [find(x) for x in nodes]}
             )
-        else:  # pragma: no cover - no current caller
-            init = (
-                sym.select(F.col("a").alias("node"))
-                .distinct()
-                .withColumn("component", F.col("node"))
-            )
+
+        init = (
+            edges.select("a", "b")
+            .mapInPandas(_local_uf, schema="node bigint, component bigint")
+            # a node seen by several partitions carries one candidate
+            # label per partition — fold to one row per node (min is
+            # a valid same-component contraction of contractions)
+            .groupBy("node")
+            .agg(F.min("component").alias("component"))
+        )
         # Lazy cut + initial Σ-probe in ONE job (the round idiom below):
         # with a contraction start, round 0 can already be the fixpoint,
         # so the old "round 0 always changes" shortcut no longer holds —
         # seed prev_sum from the initial labels instead.
-        labels = _cut(init, eager=False)
+        labels = init.localCheckpoint(eager=False)
         prev_sum = bounded_collect(
             labels.agg(
                 F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
@@ -285,7 +243,7 @@ def connected_components(
             # one fewer driver barrier per round, same lineage truncation
             # (the RDD is marked before the action; every later consumer
             # reads the persisted blocks).
-            new_labels = _cut(stepped, f"cc-round-{it}", eager=False)
+            new_labels = stepped.localCheckpoint(eager=False)
             # Convergence probe: per-node labels are MONOTONE
             # non-increasing across rounds (least(old, nbr_min) ≤ old, and
             # the jump resolves through label(x) ≤ x), so Σ component is
@@ -309,12 +267,6 @@ def connected_components(
             )[0].s
             changed = int(new_sum != prev_sum)
             prev_sum = new_sum
-            # The previous ROUND's checkpoint is dead once this round is
-            # eagerly materialized (nothing references old labels anymore —
-            # the sum probe reads only new_labels): sym recomputes from the
-            # cc-base edges, never from round files.
-            if checkpoint_dir is not None and it >= 1:
-                _rm(f"{checkpoint_dir}/cc-round-{it - 1}")
             labels = new_labels
             if changed == 0:
                 if stats is not None:

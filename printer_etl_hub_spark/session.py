@@ -13,6 +13,32 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: Runtime-settable confs every session of the engine needs: ``get_spark``
+#: builds with them and ``apply_runtime_conf`` sets them on a session built
+#: elsewhere.
+RUNTIME_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    # Naive parquet timestamp[us] must come back as TIMESTAMP, not
+    # TIMESTAMP_NTZ: NTZ breaks withWatermark (event time requires
+    # TIMESTAMP) and long-casts, and the UTC session makes the two
+    # representations value-identical anyway.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+}
+
+
+def default_driver_memory() -> str:
+    """Three quarters of the host's physical memory, in MiB.
+
+    In local mode the driver JVM holds the executors too, so its heap cap
+    is the engine's whole memory bound; sized from the host, the heap can
+    never grow past physical RAM. ``SPARK_DRIVER_MEMORY`` overrides it.
+    """
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{total * 3 // 4 // 2**20}m"
+
 
 def get_spark(
     app_name: str = "printer_etl_hub_spark",
@@ -36,17 +62,12 @@ def get_spark(
         # initialPartitionNum (e.g. 2-4x total cores) and let AQE coalesce —
         # measured ~35% overhead at local test sizes, so not the default.
         .config("spark.sql.shuffle.partitions", str(sp))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # Naive parquet timestamp[us] must come back as TIMESTAMP, not
-        # TIMESTAMP_NTZ: NTZ breaks withWatermark (event time requires
-        # TIMESTAMP) and long-casts, and the UTC session makes the two
-        # representations value-identical anyway.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        .config(map=RUNTIME_CONF)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # PySpark's call-site capture (on by default) wraps every
@@ -91,16 +112,7 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     so it cannot be applied here: a session built elsewhere keeps the
     capture on.
     """
-    for k, v in {
-        "spark.sql.session.timeZone": "UTC",
-        # Runtime-settable: keeps naive parquet timestamps as TIMESTAMP
-        # (not NTZ) even on the driver's own session — NTZ would break
-        # watermarks and epoch casts downstream.
-        "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-    }.items():
+    for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -18,7 +18,7 @@ to ``dropDuplicatesWithinWatermark`` when dedup-within-horizon is enough.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..bounded import bounded_collect
@@ -49,6 +49,16 @@ def _read_history(spark, path: str, batch_id: int) -> DataFrame | None:
             return None
         raise
     return df.filter(F.col("batch_id") != F.lit(int(batch_id)))
+
+
+def _newest_per_user(df: DataFrame) -> DataFrame:
+    """Each user's row of the highest ``batch_id``, without ``batch_id``."""
+    wl = Window.partitionBy("_u").orderBy(F.desc("batch_id"))
+    return (
+        df.withColumn("_r", F.row_number().over(wl))
+        .filter(F.col("_r") == 1)
+        .drop("_r", "batch_id")
+    )
 
 
 def corpus_ingest_stream(
@@ -1128,7 +1138,6 @@ def attribution_sink(
     reorder journeys differently in Spark (NULLS FIRST) than in the
     oracle (NULLS LAST).
     """
-    from pyspark.sql import Window
 
     from ..operators.attribution import ATTR_CONV, ATTR_LOST, ATTR_START
     from ..operators.attribution import attribution_frames
@@ -1139,14 +1148,6 @@ def attribution_sink(
             return None
         return df.select(
             "_u", "last_node", "converted", "last_ts", "last_eid", "batch_id"
-        )
-
-    def _newest_per_user(df):
-        wl = Window.partitionBy("_u").orderBy(F.desc("batch_id"))
-        return (
-            df.withColumn("_r", F.row_number().over(wl))
-            .filter(F.col("_r") == 1)
-            .drop("_r")
         )
 
     def _read_trans(spark, upto_exclusive: int | None = None):
@@ -1247,7 +1248,7 @@ def attribution_sink(
             )
         hist = _read_state(spark, upto_exclusive=batch_id)
         st = (
-            _newest_per_user(hist).drop("batch_id") if hist is not None else None
+            _newest_per_user(hist) if hist is not None else None
         )
         n_late = 0
         late_u = None
@@ -1446,7 +1447,6 @@ def deadline_funnel_sink(
     """
     import pandas as pd
 
-    from pyspark.sql import Window
 
     from ..plans.relational import _DF_WINDOW_US, _FUNNEL
 
@@ -1462,14 +1462,6 @@ def deadline_funnel_sink(
             return None
         return df.select(
             "_u", "d_max", "views", "qclicks", "last_tsm", "batch_id"
-        )
-
-    def _newest(df):
-        wl = Window.partitionBy("_u").orderBy(F.desc("batch_id"))
-        return (
-            df.withColumn("_r", F.row_number().over(wl))
-            .filter(F.col("_r") == 1)
-            .drop("_r", "batch_id")
         )
 
     def _step(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1536,7 +1528,7 @@ def deadline_funnel_sink(
                 f"{events_dir}/batch_id={batch_id}"
             )
         hist = _read_state(spark, upto_exclusive=batch_id)
-        st = _newest(hist) if hist is not None else None
+        st = _newest_per_user(hist) if hist is not None else None
         n_late = 0
         late_u = None
         if st is not None:
@@ -1589,7 +1581,7 @@ def deadline_funnel_sink(
             f"{state_dir}/batch_id={batch_id}"
         )
         # current table: q277's 3-row readout off the merged state
-        cur = _newest(_read_state(spark))
+        cur = _newest_per_user(_read_state(spark))
         agg = cur.agg(
             F.sum(F.when(F.col("d_max") >= 1, 1).otherwise(0))
             .cast("bigint")
@@ -1630,7 +1622,7 @@ def deadline_funnel_sink(
         )
         _compact_store(
             spark, state_dir, batch_id, compact_every,
-            lambda: _newest(_read_state(spark, batch_id)),
+            lambda: _newest_per_user(_read_state(spark, batch_id)),
         )
         if events_dir is not None:
             _compact_store(
@@ -1921,15 +1913,6 @@ def seq_patterns_sink(
     q269's batch output over the same rows, compaction triggered or
     not; re-delivering the last batch is a no-op.
     """
-    from pyspark.sql import Window
-
-    def _newest_state(df):
-        wl = Window.partitionBy("_u").orderBy(F.desc("batch_id"))
-        return (
-            df.withColumn("_r", F.row_number().over(wl))
-            .filter(F.col("_r") == 1)
-            .drop("_r", "batch_id")
-        )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -1948,7 +1931,7 @@ def seq_patterns_sink(
                          with_batch_id=True)
         n_late = 0
         if st is not None:
-            st = _newest_state(st.select("_u", "p2", "p1", "last_ts", "batch_id"))
+            st = _newest_per_user(st.select("_u", "p2", "p1", "last_ts", "batch_id"))
             # ordered-arrival audit (VERDICT r11 #3): batch events
             # stamped earlier than the user's stored last-seen ts
             # arrived out of order — the stitched tail is then wrong
@@ -2128,7 +2111,7 @@ def seq_patterns_sink(
         )
         _compact_store(
             spark, state_dir, batch_id, compact_every,
-            lambda: _newest_state(
+            lambda: _newest_per_user(
                 _read_store(spark, state_dir, batch_id, with_batch_id=True)
                 .select("_u", "p2", "p1", "last_ts", "batch_id")
             ),

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
@@ -85,6 +86,39 @@ def count_round_trips(fn):
 @pytest.fixture(scope="session")
 def duck():
     return duck_views(SF_ORACLE)
+
+
+# Textbook pieces the independent-reference tests (test_wave*_refs.py)
+# share; each recomputes its statistic from raw rows, not from the engine.
+
+
+def arm_a(uid) -> bool:
+    """The A/B experiment arm of ``uid``, from hashlib rather than SQL md5."""
+    return int(hashlib.md5(f"{uid}:exp1".encode()).hexdigest()[:15], 16) % 2 == 0
+
+
+def daily_event_counts(duck) -> list:
+    """``(day, n_events)`` for every day with a stamped event, by day."""
+    return duck.execute(
+        "SELECT CAST(date_trunc('day', ts) AS DATE), count(*) FROM events "
+        "WHERE ts IS NOT NULL GROUP BY 1 ORDER BY 1"
+    ).fetchall()
+
+
+def midranks(values):
+    """Textbook average ranks with ties (1-based), plain Python floats."""
+    order = sorted(range(len(values)), key=lambda i: values[i])
+    ranks = [0.0] * len(values)
+    i = 0
+    while i < len(order):
+        j = i
+        while j + 1 < len(order) and values[order[j + 1]] == values[order[i]]:
+            j += 1
+        avg = (i + 1 + j + 1) / 2.0
+        for k in range(i, j + 1):
+            ranks[order[k]] = avg
+        i = j + 1
+    return ranks
 
 
 # ---------------------------------------------------------------------------

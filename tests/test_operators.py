@@ -297,31 +297,16 @@ def test_connected_components_chain_and_clique(spark):
     }
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """checkpoint_dir= swaps the per-round lineage cut to reliable
-    checkpoint() — same labels, and the round state actually lands in the
-    directory (what survives executor loss on a real cluster)."""
-    import os
+def test_connected_components_rejects_non_bigint_ids(spark):
+    """A non-bigint id column raises a TypeError naming its type, before
+    any job runs."""
+    import pytest
 
     from printer_etl_hub_spark.operators.components import connected_components
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "a_id BIGINT, b_id BIGINT"
-    )
-    ckpt = str(tmp_path / "cc_ckpt")
-    got = {
-        (r.node, r.component)
-        for r in connected_components(
-            edges, "a_id", "b_id", checkpoint_dir=ckpt
-        ).collect()
-    }
-    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    subdirs = sorted(e.name for e in os.scandir(ckpt))
-    assert "cc-base" in subdirs, subdirs
-    # Per-round data must NOT accumulate: only the FINAL round's
-    # subdirectory survives (retired rounds are deleted as they die).
-    rounds = [d for d in subdirs if d.startswith("cc-round-")]
-    assert len(rounds) == 1, subdirs
+    edges = spark.createDataFrame([("x", "y")], "a_id STRING, b_id STRING")
+    with pytest.raises(TypeError, match="a_id: string, b_id: string"):
+        connected_components(edges, "a_id", "b_id")
 
 
 def test_hll_rollup_merge_is_lossless(spark):

@@ -17,45 +17,13 @@ import hashlib
 import math
 from collections import Counter, defaultdict
 
-import duckdb
-import pytest
-
 from printer_etl_hub_spark.plans import REGISTRY
 
-from conftest import SF_ORACLE
+from conftest import SF_ORACLE, midranks
 
 
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        c.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
-        )
-    return c
-
-
-def _midranks(values):
-    """Textbook average ranks with ties (1-based), plain Python floats."""
-    order = sorted(range(len(values)), key=lambda i: values[i])
-    ranks = [0.0] * len(values)
-    i = 0
-    while i < len(order):
-        j = i
-        while j + 1 < len(order) and values[order[j + 1]] == values[order[i]]:
-            j += 1
-        avg = (i + 1 + j + 1) / 2.0
-        for k in range(i, j + 1):
-            ranks[order[k]] = avg
-        i = j + 1
-    return ranks
-
-
-def test_q279_welch_matches_reference(spark, con):
-    rows = con.execute(
+def test_q279_welch_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT user_id, count(*) FROM events WHERE user_id IS NOT NULL "
         "GROUP BY user_id"
     ).fetchall()
@@ -79,15 +47,15 @@ def test_q279_welch_matches_reference(spark, con):
     assert abs(r.df - df_ref) < 1e-5, (r.df, df_ref)
 
 
-def test_q280_spearman_matches_reference(spark, con):
-    rows = con.execute(
+def test_q280_spearman_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT count(*), count(DISTINCT CAST(date_trunc('day', ts) AS DATE)) "
         "FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL "
         "GROUP BY user_id"
     ).fetchall()
     xs = [r[0] for r in rows]
     ys = [r[1] for r in rows]
-    rx, ry = _midranks(xs), _midranks(ys)
+    rx, ry = midranks(xs), midranks(ys)
     n = len(rows)
     mx, my = sum(rx) / n, sum(ry) / n
     num = sum((a - mx) * (b - my) for a, b in zip(rx, ry))
@@ -100,8 +68,8 @@ def test_q280_spearman_matches_reference(spark, con):
     assert abs(r.rho - rho_ref) < 1e-9, (r.rho, rho_ref)
 
 
-def test_q282_wilcoxon_matches_reference(spark, con):
-    rows = con.execute(
+def test_q282_wilcoxon_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT CAST(date_trunc('day', ts) AS DATE), count(*) FROM events "
         "WHERE ts IS NOT NULL GROUP BY 1"
     ).fetchall()
@@ -114,7 +82,7 @@ def test_q282_wilcoxon_matches_reference(spark, con):
         if d - dt.timedelta(days=7) in daily
     ]
     nz = [d for d in diffs if d != 0]
-    ranks = _midranks([abs(d) for d in nz])
+    ranks = midranks([abs(d) for d in nz])
     w_plus = sum(r for r, d in zip(ranks, nz) if d > 0)
     n = len(nz)
     ties = Counter(abs(d) for d in nz)
@@ -127,8 +95,8 @@ def test_q282_wilcoxon_matches_reference(spark, con):
     assert abs(r.z - z_ref) < 1e-9, (r.z, z_ref)
 
 
-def test_q281_cramers_v_matches_reference(spark, con):
-    rows = con.execute(
+def test_q281_cramers_v_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT lang, source, count(*) FROM documents "
         "WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2"
     ).fetchall()
@@ -160,8 +128,8 @@ def test_q281_cramers_v_matches_reference(spark, con):
     assert abs(r.cramers_v - v_ref) < 1e-9, (r.cramers_v, v_ref)
 
 
-def test_q283_brown_forsythe_matches_reference(spark, con):
-    rows = con.execute(
+def test_q283_brown_forsythe_matches_reference(spark, duck):
+    rows = duck.execute(
         r"SELECT source, len(regexp_split_to_array(trim(lower(text)), '\s+')) "
         "FROM documents WHERE text IS NOT NULL AND source IS NOT NULL"
     ).fetchall()
@@ -186,7 +154,7 @@ def test_q283_brown_forsythe_matches_reference(spark, con):
     assert abs(r.f_stat - f_ref) < 1e-9, (r.f_stat, f_ref)
 
 
-def test_q284_kappa_matches_reference(spark, con):
+def test_q284_kappa_matches_reference(spark, duck):
     # confusion cells come from the engines' shared classifier; the
     # KAPPA FORMULA (what the oracle mirrors) is recomputed from the
     # textbook definition p_o, p_e
@@ -212,10 +180,10 @@ def test_q284_kappa_matches_reference(spark, con):
     assert abs(r.kappa - kappa_ref) < 1e-9, (r.kappa, kappa_ref)
 
 
-def test_q285_calinski_harabasz_matches_reference(spark, con):
+def test_q285_calinski_harabasz_matches_reference(spark, duck):
     import numpy as np
 
-    rows = con.execute(
+    rows = duck.execute(
         "SELECT label, embedding FROM embeddings "
         "WHERE label IS NOT NULL AND embedding IS NOT NULL"
     ).fetchall()
@@ -239,10 +207,10 @@ def test_q285_calinski_harabasz_matches_reference(spark, con):
     assert abs(r.ch - ch_ref) < 1e-6 * ch_ref, (r.ch, ch_ref)
 
 
-def test_q286_davies_bouldin_matches_reference(spark, con):
+def test_q286_davies_bouldin_matches_reference(spark, duck):
     import numpy as np
 
-    rows = con.execute(
+    rows = duck.execute(
         "SELECT label, embedding FROM embeddings "
         "WHERE label IS NOT NULL AND embedding IS NOT NULL"
     ).fetchall()
@@ -274,8 +242,8 @@ def test_q286_davies_bouldin_matches_reference(spark, con):
         assert abs(got[l].db_index - db_ref) < 1e-6
 
 
-def test_q287_temperature_mixture_matches_reference(spark, con):
-    rows = con.execute(
+def test_q287_temperature_mixture_matches_reference(spark, duck):
+    rows = duck.execute(
         r"SELECT source, sum(len(regexp_split_to_array(trim(lower(text)), '\s+'))) "
         "FROM documents WHERE source IS NOT NULL GROUP BY source"
     ).fetchall()
@@ -291,10 +259,10 @@ def test_q287_temperature_mixture_matches_reference(spark, con):
         assert abs(r.boost - w_ref * n_total / n[r.source]) < 1e-6
 
 
-def test_q288_dim_robust_scaling_matches_reference(spark, con):
+def test_q288_dim_robust_scaling_matches_reference(spark, duck):
     import numpy as np
 
-    rows = con.execute(
+    rows = duck.execute(
         "SELECT embedding FROM embeddings WHERE embedding IS NOT NULL"
     ).fetchall()
     x = np.array([r[0] for r in rows], dtype=np.float64)
@@ -316,8 +284,8 @@ def test_q288_dim_robust_scaling_matches_reference(spark, con):
         assert abs(r.iqr - (q3 - q1)) < 1e-9
 
 
-def test_q289_pettitt_matches_reference(spark, con):
-    rows = con.execute(
+def test_q289_pettitt_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT CAST(date_trunc('day', ts) AS DATE), count(*) FROM events "
         "WHERE ts IS NOT NULL GROUP BY 1 ORDER BY 1"
     ).fetchall()
@@ -343,10 +311,10 @@ def test_q289_pettitt_matches_reference(spark, con):
     ), (r, best)
 
 
-def test_q290_cuped_matches_reference(spark, con):
+def test_q290_cuped_matches_reference(spark, duck):
     import datetime as dt
 
-    rows = con.execute(
+    rows = duck.execute(
         "SELECT user_id, CAST(date_trunc('day', ts) AS DATE) FROM events "
         "WHERE ts IS NOT NULL AND user_id IS NOT NULL"
     ).fetchall()
@@ -380,10 +348,10 @@ def test_q290_cuped_matches_reference(spark, con):
     assert abs(r.var_reduction - cov * cov / (varx * vary)) < 1e-9
 
 
-def test_q291_mcnemar_matches_reference(spark, con):
+def test_q291_mcnemar_matches_reference(spark, duck):
     import datetime as dt
 
-    rows = con.execute(
+    rows = duck.execute(
         "SELECT user_id, CAST(date_trunc('day', ts) AS DATE), "
         "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END FROM events "
         "WHERE ts IS NOT NULL AND user_id IS NOT NULL"

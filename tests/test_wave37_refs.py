@@ -14,37 +14,17 @@ PUBLISHED formula for that exact variant.
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 import math
 
-import duckdb
 import numpy as np
-import pytest
 
 from printer_etl_hub_spark.plans import REGISTRY
 
-from conftest import SF_ORACLE
+from conftest import SF_ORACLE, arm_a, daily_event_counts
 
 
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        c.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
-        )
-    return c
-
-
-def _arm_a(uid) -> bool:
-    return int(hashlib.md5(f"{uid}:exp1".encode()).hexdigest()[:15], 16) % 2 == 0
-
-
-def test_q292_logrank_matches_reference(spark, con):
-    rows = con.execute(
+def test_q292_logrank_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT user_id, min(CAST(date_trunc('day', ts) AS DATE)), "
         "max(CAST(date_trunc('day', ts) AS DATE)), "
         "min(CASE WHEN event_type = 'purchase' "
@@ -56,9 +36,9 @@ def test_q292_logrank_matches_reference(spark, con):
     subj = []  # (arm_a, t, converted)
     for uid, first, _last, conv in rows:
         if conv is not None:
-            subj.append((_arm_a(uid), (conv - first).days, True))
+            subj.append((arm_a(uid), (conv - first).days, True))
         else:
-            subj.append((_arm_a(uid), (max_day - first).days, False))
+            subj.append((arm_a(uid), (max_day - first).days, False))
     o1 = e1 = v1 = 0.0
     for t in sorted({t for _, t, c in subj if c}):
         # textbook risk sets: recount at-risk per event time, no prefix
@@ -81,8 +61,8 @@ def test_q292_logrank_matches_reference(spark, con):
     assert abs(r.z - z_ref) < 1e-9, (r.z, z_ref)
 
 
-def test_q293_cliffs_delta_matches_reference(spark, con):
-    rows = con.execute(
+def test_q293_cliffs_delta_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT event_type, value FROM events WHERE event_type IS NOT NULL "
         "AND value IS NOT NULL AND NOT isnan(value)"
     ).fetchall()
@@ -113,8 +93,8 @@ def test_q293_cliffs_delta_matches_reference(spark, con):
         assert r.magnitude == band
 
 
-def test_q294_cochran_q_matches_reference(spark, con):
-    rows = con.execute(
+def test_q294_cochran_q_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT user_id, date_trunc('week', ts), "
         "max(CASE WHEN event_type='view' THEN 1 ELSE 0 END), "
         "max(CASE WHEN event_type='click' THEN 1 ELSE 0 END), "
@@ -136,16 +116,12 @@ def test_q294_cochran_q_matches_reference(spark, con):
     assert abs(r.q_stat - q_ref) < 1e-9, (r.q_stat, q_ref)
 
 
-def _daily_counts(con):
-    rows = con.execute(
-        "SELECT CAST(date_trunc('day', ts) AS DATE), count(*) FROM events "
-        "WHERE ts IS NOT NULL GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-    return np.array([x for _, x in rows], dtype="float64")
+def _daily_counts(duck):
+    return np.array([x for _, x in daily_event_counts(duck)], dtype="float64")
 
 
-def test_q295_ljung_box_matches_reference(spark, con):
-    x = _daily_counts(con)
+def test_q295_ljung_box_matches_reference(spark, duck):
+    x = _daily_counts(duck)
     n = len(x)
     xc = x - x.mean()  # textbook mean-centering, floats — not the
     # engine's n·x − S integer cancellation
@@ -165,8 +141,8 @@ def test_q295_ljung_box_matches_reference(spark, con):
         assert abs(r.lb_stat - lb) < 1e-7, (k, r.lb_stat, lb)
 
 
-def test_q296_binned_drift_matches_reference(spark, con):
-    rows = con.execute(
+def test_q296_binned_drift_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT CAST(date_trunc('day', ts) AS DATE), value FROM events "
         "WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)"
     ).fetchall()
@@ -211,8 +187,8 @@ def test_q296_binned_drift_matches_reference(spark, con):
     assert abs(any_row.chi2_total - chi2_tot) < 1e-6 * max(1.0, abs(chi2_tot))
 
 
-def test_q297_durbin_watson_matches_reference(spark, con):
-    x = _daily_counts(con)
+def test_q297_durbin_watson_matches_reference(spark, duck):
+    x = _daily_counts(duck)
     n = len(x)
     i = np.arange(1, n + 1, dtype="float64")
     # textbook least squares via the centered form, not the engine's
@@ -228,8 +204,8 @@ def test_q297_durbin_watson_matches_reference(spark, con):
     assert abs(r.dw - dw) < 1e-9, (r.dw, dw)
 
 
-def test_q298_silhouette_matches_reference(spark, con):
-    rows = con.execute(
+def test_q298_silhouette_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT vec_id, label, embedding FROM embeddings "
         "WHERE label IS NOT NULL AND embedding IS NOT NULL"
     ).fetchall()
@@ -255,8 +231,8 @@ def test_q298_silhouette_matches_reference(spark, con):
     assert abs(next(iter(got.values())).overall_sil - float(s.mean())) < 1e-9
 
 
-def test_q299_runs_test_matches_reference(spark, con):
-    x = [int(v) for v in _daily_counts(con)]
+def test_q299_runs_test_matches_reference(spark, duck):
+    x = [int(v) for v in _daily_counts(duck)]
     n = len(x)
     med = sorted(x)[(n + 1) // 2 - 1]  # the engine's pinned LOWER median
     signs = [v > med for v in x if v != med]

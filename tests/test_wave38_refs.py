@@ -10,39 +10,19 @@ reference implements the textbook statistic on that data).
 
 from __future__ import annotations
 
-import hashlib
 import math
 
-import duckdb
 import numpy as np
-import pytest
 
 from printer_etl_hub_spark.plans import REGISTRY
 
-from conftest import SF_ORACLE
+from conftest import SF_ORACLE, arm_a
 
 
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        c.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
-        )
-    return c
-
-
-def _arm_a(uid) -> bool:
-    return int(hashlib.md5(f"{uid}:exp1".encode()).hexdigest()[:15], 16) % 2 == 0
-
-
-def test_q300_anova_matches_reference(spark, con):
+def test_q300_anova_matches_reference(spark, duck):
     from decimal import ROUND_HALF_UP, Decimal
 
-    rows = con.execute(
+    rows = duck.execute(
         "SELECT event_type, CASE WHEN value = 0 THEN 0.0 ELSE value END "
         "FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL "
         "AND NOT isnan(value)"
@@ -69,8 +49,8 @@ def test_q300_anova_matches_reference(spark, con):
     assert abs(r.f_stat - f_ref) < 1e-9 * max(1.0, abs(f_ref)), (r.f_stat, f_ref)
 
 
-def test_q301_curriculum_matches_reference(spark, con):
-    rows = con.execute(
+def test_q301_curriculum_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT doc_id, len(regexp_split_to_array(trim(lower(text)), '\\s+')) "
         "FROM documents"
     ).fetchall()
@@ -94,14 +74,14 @@ def test_q301_curriculum_matches_reference(spark, con):
         assert (r.n_docs, r.tokens_total, r.min_toks, r.max_toks) == (nd, tt, mn, mx)
 
 
-def test_q302_cohens_d_matches_reference(spark, con):
-    rows = con.execute(
+def test_q302_cohens_d_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT user_id, count(*) FROM events WHERE user_id IS NOT NULL "
         "GROUP BY user_id"
     ).fetchall()
     a, b = [], []
     for uid, x in rows:
-        (a if _arm_a(uid) else b).append(x)
+        (a if arm_a(uid) else b).append(x)
     ma, mb = sum(a) / len(a), sum(b) / len(b)
     va = sum((x - ma) ** 2 for x in a)
     vb = sum((x - mb) ** 2 for x in b)
@@ -117,8 +97,8 @@ def test_q302_cohens_d_matches_reference(spark, con):
     assert abs(r.g - g_ref) < 1e-9, (r.g, g_ref)
 
 
-def test_q303_mantel_haenszel_matches_reference(spark, con):
-    rows = con.execute(
+def test_q303_mantel_haenszel_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT user_id, isodow(CAST(date_trunc('day', ts) AS DATE)) - 1, "
         "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END "
         "FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL"
@@ -126,7 +106,7 @@ def test_q303_mantel_haenszel_matches_reference(spark, con):
     strata: dict = {}
     for uid, dow, conv in rows:
         cell = strata.setdefault(dow, [0, 0, 0, 0])  # a b c d
-        if _arm_a(uid):
+        if arm_a(uid):
             cell[0 if conv else 1] += 1
         else:
             cell[2 if conv else 3] += 1
@@ -153,8 +133,8 @@ def test_q303_mantel_haenszel_matches_reference(spark, con):
         assert abs(r.cmh - cmh) < 1e-9, (r.cmh, cmh)
 
 
-def test_q304_fleiss_matches_reference(spark, con):
-    rows = con.execute(
+def test_q304_fleiss_matches_reference(spark, duck):
+    rows = duck.execute(
         "SELECT n_chars, len(regexp_split_to_array(trim(lower(text)), '\\s+')), "
         "len(list_distinct(regexp_split_to_array(trim(lower(text)), '\\s+'))) "
         "FROM documents"
@@ -187,10 +167,10 @@ def test_q304_fleiss_matches_reference(spark, con):
     assert abs(r.kappa - kappa_ref) < 1e-9, (r.kappa, kappa_ref)
 
 
-def test_q305_chow_matches_reference(spark, con):
+def test_q305_chow_matches_reference(spark, duck):
     import datetime as dt
 
-    rows = con.execute(
+    rows = duck.execute(
         "SELECT CAST(date_trunc('day', ts) AS DATE), count(*) FROM events "
         "WHERE ts IS NOT NULL GROUP BY 1 ORDER BY 1"
     ).fetchall()

@@ -11,37 +11,15 @@ from __future__ import annotations
 import math
 from decimal import ROUND_HALF_UP, Decimal
 
-import duckdb
 import numpy as np
-import pytest
 
 from printer_etl_hub_spark.plans import REGISTRY
 
-from conftest import SF_ORACLE
+from conftest import SF_ORACLE, daily_event_counts
 
 
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        c.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
-        )
-    return c
-
-
-def _daily(con):
-    return con.execute(
-        "SELECT CAST(date_trunc('day', ts) AS DATE), count(*) FROM events "
-        "WHERE ts IS NOT NULL GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-
-
-def test_q306_decomposition_matches_reference(spark, con):
-    rows = _daily(con)
+def test_q306_decomposition_matches_reference(spark, duck):
+    rows = daily_event_counts(duck)
     days = [d for d, _ in rows]
     x = [v for _, v in rows]
     n = len(x)
@@ -71,8 +49,8 @@ def test_q306_decomposition_matches_reference(spark, con):
             assert r.seasonal is None
 
 
-def test_q307_scorecard_matches_reference(spark, con):
-    rows = _daily(con)
+def test_q307_scorecard_matches_reference(spark, duck):
+    rows = daily_event_counts(duck)
     days = [d for d, _ in rows]
     x = [float(v) for _, v in rows]
 
@@ -132,7 +110,7 @@ def test_q307_scorecard_matches_reference(spark, con):
     # 1e-6 mae agreement above is also the convention pin
 
 
-def test_q308_auc_matches_reference(spark, con):
+def test_q308_auc_matches_reference(spark, duck):
     # independent pairwise AUC counting over (lang label, engine score)
     # — the score formula itself is gate-verified by q25; the pin here
     # is the rank identity and the tie handling
@@ -170,7 +148,7 @@ def test_q308_auc_matches_reference(spark, con):
     assert r.auc is not None and abs(r.auc - 0.5) > 1e-3
 
 
-def test_q309_brier_matches_reference(spark, con):
+def test_q309_brier_matches_reference(spark, duck):
     from pyspark.sql import functions as F
 
     from printer_etl_hub_spark.functions.text import quality_features, tokenize

@@ -11,51 +11,13 @@ from __future__ import annotations
 import hashlib
 import math
 
-import duckdb
-import pytest
-
 from printer_etl_hub_spark.plans import REGISTRY
 
-from conftest import SF_ORACLE
+from conftest import SF_ORACLE, daily_event_counts, midranks
 
 
-@pytest.fixture(scope="module")
-def con():
-    c = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        c.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_ORACLE}/{t}.parquet'"
-        )
-    return c
-
-
-def _daily(con):
-    return con.execute(
-        "SELECT CAST(date_trunc('day', ts) AS DATE), count(*) FROM events "
-        "WHERE ts IS NOT NULL GROUP BY 1 ORDER BY 1"
-    ).fetchall()
-
-
-def _avg_ranks(values):
-    order = sorted(range(len(values)), key=lambda i: values[i])
-    ranks = [0.0] * len(values)
-    i = 0
-    while i < len(order):
-        j = i
-        while j + 1 < len(order) and values[order[j + 1]] == values[order[i]]:
-            j += 1
-        avg = (i + 1 + j + 1) / 2.0
-        for k in range(i, j + 1):
-            ranks[order[k]] = avg
-        i = j + 1
-    return ranks
-
-
-def test_q310_friedman_matches_reference(spark, con):
-    rows = _daily(con)
+def test_q310_friedman_matches_reference(spark, duck):
+    rows = daily_event_counts(duck)
     import datetime as dt
 
     weeks: dict = {}
@@ -69,7 +31,7 @@ def test_q310_friedman_matches_reference(spark, con):
     a = 0.0
     for w in blocks:
         vals = [w[j] for j in range(k)]
-        ranks = _avg_ranks(vals)
+        ranks = midranks(vals)
         for j in range(k):
             rj[j] += ranks[j]
         a += sum(r * r for r in ranks)
@@ -83,8 +45,8 @@ def test_q310_friedman_matches_reference(spark, con):
     assert abs(r.w - w_ref) < 1e-9, (r.w, w_ref)
 
 
-def test_q311_negbin_matches_reference(spark, con):
-    x = [v for _, v in _daily(con)]
+def test_q311_negbin_matches_reference(spark, duck):
+    x = [v for _, v in daily_event_counts(duck)]
     n = len(x)
     m = sum(x) / n
     var = sum((v - m) ** 2 for v in x) / (n - 1)
@@ -99,8 +61,8 @@ def test_q311_negbin_matches_reference(spark, con):
     assert abs(r.dispersion - (n - 1) * var / m) < 1e-6 * max(1.0, r.dispersion)
 
 
-def test_q312_grubbs_matches_reference(spark, con):
-    rows = _daily(con)
+def test_q312_grubbs_matches_reference(spark, duck):
+    rows = daily_event_counts(duck)
     x = [v for _, v in rows]
     n = len(x)
     m = sum(x) / n
@@ -118,8 +80,8 @@ def test_q312_grubbs_matches_reference(spark, con):
     assert abs(r.g_stat - best / s) < 1e-9
 
 
-def test_q313_ks_matches_reference(spark, con):
-    ids = [r[0] for r in con.execute("SELECT doc_id FROM documents").fetchall()]
+def test_q313_ks_matches_reference(spark, duck):
+    ids = [r[0] for r in duck.execute("SELECT doc_id FROM documents").fetchall()]
     us = sorted(
         (
             int(
