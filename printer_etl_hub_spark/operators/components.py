@@ -2,14 +2,25 @@
 
 Near-dup detectors (MinHash-LSH, n-gram Jaccard, SimHash — operators/
 dedup.py) emit PAIRS; a training-data pipeline needs per-document CLUSTER
-labels ("keep one doc per component"). This is min-label propagation with
-POINTER JUMPING over the pair graph, expressed as iterative DataFrame joins
-with a driver-side convergence check — seeded by a PARTITION-LOCAL
-union-find (r14; the two-phase/local-contraction CC idea of Kiveris et
-al. 2014, "Connected Components in MapReduce and Beyond"): each edge
-partition contracts its own slice in one narrow Arrow pass before any
-distributed round, so the loop only pays rounds for chains that CROSS
-partitions.
+labels ("keep one doc per component"). The operator starts from a
+union-find over edge partitions (the two-phase/local-contraction CC idea
+of Kiveris et al. 2014, "Connected Components in MapReduce and Beyond"):
+one narrow Arrow pass per partition contracts its own slice with
+union-by-min, so each node's label is the minimum id of its
+within-partition component.
+
+The union-find runs over the edges coalesced to the loop width
+(``execution.loop_execution``: one partition per
+``LOOP_ROWS_PER_PARTITION`` symmetrized edge rows).
+
+- **Width 1** (≤ 1M edge rows): the one task sees every edge, so the
+  union-find's labels ARE the component minima — the fixpoint the rounds
+  below converge to. The labels are checkpointed in one job and returned:
+  no probe, no round, no symmetrized edge table. That task holds ≤ 1M
+  edge rows and ≤ 2M nodes in a Python dict.
+- **Wider graphs** seed the distributed rounds from the per-partition
+  labels (each coalesced partition holds ~1M edge rows), so the loop only
+  pays rounds for chains that CROSS partitions.
 
 Round structure (each is a shuffle join on node id):
 1. neighbor-min message: component(n) ← min over neighbors' components —
@@ -38,7 +49,7 @@ of every round into its own query-stage job for a plan whose shape is
 fixed and already known — see the inline notes for the measured job/stage
 counts.
 
-The convergence probe is a LIMIT-1 existence check, not a full count.
+The convergence probe is one scalar sum per round, not a join.
 Non-convergence RAISES — silently returning partial labels would split
 clusters without any signal.
 """
@@ -71,8 +82,9 @@ def connected_components(
     probe rely on it); any other type raises TypeError before any job.
 
     ``stats``: optional dict the call fills with convergence telemetry
-    (``rounds`` = iterations executed, ``edges`` = symmetrized distinct
-    edge count) — the observability hook the scale audit reads.
+    (``rounds`` = distributed rounds executed, 0 when the union-find alone
+    labeled the graph; ``edges`` = input edge rows) — the observability
+    hook the scale audit reads. Filling it runs no extra job.
     """
     edges = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     id_types = dict(edges.dtypes)
@@ -104,39 +116,17 @@ def connected_components(
     # shuffle. Callers' plans outside the loop (including the returned
     # labels' consumers) run with the session's own settings.
     with loop_execution(spark, 2 * n_edges) as loop_parts:
-        # Partition AND sort the symmetrized edge table by its JOIN KEY
-        # before pinning it (r13 optimization, guide §2.4): every round's
-        # message join probes sym on "a". The cached outputPartitioning /
-        # outputOrdering satisfy the sort-merge join's requirements, so
-        # rounds exchange and sort only the (node-sized) label side —
-        # the edge table (at 100 TB the whole graph) is never re-shuffled
-        # or re-sorted after this one materialization.
-        sym = (
-            edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .repartition(loop_parts, "a")
-            .sortWithinPartitions("a")
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # Initial labels (r14 optimization — two-phase CC, the
-        # local-contraction idea of Kiveris et al. 2014): instead of the
-        # identity labeling, run a PARTITION-LOCAL union-find over the
-        # already-materialized edge blocks (one narrow mapInPandas — the
-        # only Python stage in the operator, (id, id) pairs through
-        # Arrow) and start the rounds from each node's WITHIN-PARTITION
-        # component minimum. Every within-partition chain collapses
-        # before the first distributed round, so the loop only resolves
-        # CROSS-partition chains: round count drops from O(log diameter)
-        # to O(log cross-partition diameter) (measured on q100's
-        # chain-like cosine graph: 12 rounds → 1). Per-task memory is
-        # O(nodes per partition) — bounded by the same partition sizing
-        # that bounds the join state. Correctness: union-by-min keeps
-        # every root the MINIMUM id of its tree, so the initial labels
-        # satisfy exactly the loop's invariants (label(x) ≤ x, label(x)
-        # in x's component), and the monotone Σ-probe argument below is
-        # unchanged — any valid contraction start converges to the same
-        # component-min fixpoint.
-
+        # Initial labels (two-phase CC, the local-contraction idea of
+        # Kiveris et al. 2014): instead of the identity labeling, run a
+        # union-find over the edge cut coalesced to the loop width (one
+        # narrow mapInPandas — the only Python stage in the operator,
+        # (id, id) pairs through Arrow) and label each node with its
+        # WITHIN-PARTITION component minimum. Correctness: union-by-min
+        # keeps every root the MINIMUM id of its tree, so the labels
+        # satisfy exactly the loop's invariants (label(x) ≤ x, label(x) in
+        # x's component). Per-task memory: a dict and a set over the
+        # task's nodes; 2·n_edges ≤ loop_parts·LOOP_ROWS_PER_PARTITION, so
+        # at width 1 the task holds ≤ 1M edge rows and ≤ 2M nodes.
         def _local_uf(batches):
             import pandas as pd
 
@@ -166,14 +156,44 @@ def connected_components(
                 {"node": nodes, "component": [find(x) for x in nodes]}
             )
 
-        init = (
-            edges.select("a", "b")
-            .mapInPandas(_local_uf, schema="node bigint, component bigint")
-            # a node seen by several partitions carries one candidate
-            # label per partition — fold to one row per node (min is
-            # a valid same-component contraction of contractions)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
+        init = edges.coalesce(loop_parts).mapInPandas(
+            _local_uf, schema="node bigint, component bigint"
+        )
+        if loop_parts == 1:
+            # The one task saw every edge, so every root is its whole
+            # component's minimum: the labels are the fixpoint the rounds
+            # would converge to. Checkpointed so consumers never re-run
+            # the Python pass. They come back as one partition with no
+            # hash partitioning: a consumer's join on node shuffles both
+            # sides at the session width (AQE then broadcasts the labels)
+            # rather than funnelling its own side into one task.
+            if stats is not None:
+                stats["rounds"] = 0
+                stats["edges"] = n_edges
+            return init.localCheckpoint()
+        # Wider graphs: every within-partition chain collapses before the
+        # first distributed round, so round count drops from O(log
+        # diameter) to O(log cross-partition diameter) (measured on q100's
+        # chain-like cosine graph: 12 rounds → 1). Any valid contraction
+        # start converges to the same component-min fixpoint under the
+        # monotone Σ-probe below. A node seen by several partitions
+        # carries one candidate label per partition — fold to one row per
+        # node (min is a valid same-component contraction of
+        # contractions).
+        init = init.groupBy("node").agg(F.min("component").alias("component"))
+        # Partition AND sort the symmetrized edge table by its JOIN KEY
+        # before pinning it (r13 optimization, guide §2.4): every round's
+        # message join probes sym on "a". The cached outputPartitioning /
+        # outputOrdering satisfy the sort-merge join's requirements, so
+        # rounds exchange and sort only the (node-sized) label side —
+        # the edge table (at 100 TB the whole graph) is never re-shuffled
+        # or re-sorted after this one materialization.
+        sym = (
+            edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .distinct()
+            .repartition(loop_parts, "a")
+            .sortWithinPartitions("a")
+            .persist(StorageLevel.MEMORY_AND_DISK)
         )
         # Lazy cut + initial Σ-probe in ONE job (the round idiom below):
         # with a contraction start, round 0 can already be the fixpoint,
@@ -271,7 +291,7 @@ def connected_components(
             if changed == 0:
                 if stats is not None:
                     stats["rounds"] = it + 1
-                    stats["edges"] = sym.count()
+                    stats["edges"] = n_edges
                 sym.unpersist()
                 return labels
         sym.unpersist()

@@ -825,7 +825,7 @@ def q81_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering BEFORE the expensive pair generation (the same filter-before-
     fetch discipline as the fleet plan). Shuffle ledger: the load-balancing
     doc_id repartition ahead of the annotation stage, one window by
-    content digest, one shuffle per Jaccard index build, the CC rounds —
+    content digest, one shuffle per Jaccard index build, the CC labeling —
     everything else is narrow.
     """
     from pyspark import StorageLevel

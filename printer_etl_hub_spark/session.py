@@ -102,7 +102,7 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     must be UTC to line up with the (UTC-naive) DuckDB oracle. AQE is forced
     on, and it is a trade-off, not a free win: it re-plans joins and
     coalesces partitions from runtime statistics, but each query stage is
-    its own Spark job. q72 at sf0.01 runs 17 jobs with AQE and 7 without
+    its own Spark job. q72 at sf0.01 runs 15 jobs with AQE and 5 without
     (same rows), and at sf0.1 some queries are faster without it and others
     slower.
 

@@ -680,7 +680,7 @@ def probe_cc(spark, k: int) -> dict:
         comp = connected_components(pairs, "a_id", "b_id", stats=stats)
         out[name] = {
             "pairs": pairs.count(),
-            "sym_edges": stats.get("edges"),
+            "edges": stats.get("edges"),
             "rounds": stats.get("rounds"),
             "clusters": comp.select("component").distinct().count(),
             "clustered": comp.count(),

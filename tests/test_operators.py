@@ -322,30 +322,39 @@ def test_hll_rollup_merge_is_lossless(spark):
         assert r.est_users_merged == r.est_users_direct, r
 
 
-def test_connected_components_long_chain_pointer_jump(spark):
+def test_connected_components_long_chain_pointer_jump(spark, monkeypatch):
     """A 100-node chain (diameter 99) must converge within the pointer-jump
     round budget (~log2) — plain one-hop propagation would need 99 rounds
-    and previously mislabeled silently."""
+    and previously mislabeled silently. The loop width is forced above 1
+    so the distributed rounds run."""
     from printer_etl_hub_spark.operators.components import connected_components
 
+    monkeypatch.setattr("printer_etl_hub_spark.execution.LOOP_ROWS_PER_PARTITION", 50)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 100)], "a_id BIGINT, b_id BIGINT"
     )
+    stats: dict = {}
     got = {
         (r.node, r.component)
-        for r in connected_components(edges, "a_id", "b_id", max_iter=12).collect()
+        for r in connected_components(
+            edges, "a_id", "b_id", max_iter=12, stats=stats
+        ).collect()
     }
     assert got == {(i, 1) for i in range(1, 101)}
+    assert 1 <= stats["rounds"] <= 12
 
 
-def test_connected_components_multi_partition_union_find(spark):
+def test_connected_components_multi_partition_union_find(spark, monkeypatch):
     """r14: the partition-local union-find init must be a pure
     contraction under ANY edge partitioning — scatter a long chain and
     two cliques round-robin across 7 partitions so every partition holds
     disconnected fragments and the distributed rounds must merge ACROSS
     partitions. Labels must equal the component minimum exactly, and the
-    rounds telemetry must stay inside the pointer-jump budget."""
+    rounds telemetry must stay inside the pointer-jump budget. The loop
+    width is forced above 1 so the union-find only seeds the rounds."""
     from printer_etl_hub_spark.operators.components import connected_components
+
+    monkeypatch.setattr("printer_etl_hub_spark.execution.LOOP_ROWS_PER_PARTITION", 50)
 
     chain = [(i, i + 1) for i in range(1, 100)]
     cliques = [(200 + i, 200 + j) for i in range(5) for j in range(i + 1, 5)]
@@ -365,6 +374,36 @@ def test_connected_components_multi_partition_union_find(spark):
     want |= {(300 + i, 300) for i in range(4)}
     assert got == want
     assert 1 <= stats["rounds"] <= 12
+
+
+def test_connected_components_width_one_is_one_union_find(spark):
+    """A graph that fits one loop partition is labeled by the union-find
+    alone: the one task sees every edge, so its roots are the component
+    minima. The operator runs no convergence probe and no round — the
+    edge cut's count (two jobs under AQE) and the labels' checkpoint are
+    its only jobs — even with the edges dealt round-robin over 7
+    partitions, so no partition holds a connected fragment."""
+    from conftest import count_jobs
+
+    from printer_etl_hub_spark.operators.components import connected_components
+
+    chain = [(i, i + 1) for i in range(1, 100)]
+    clique = [(200 + i, 200 + j) for i in range(5) for j in range(i + 1, 5)]
+    rows = chain + clique
+    dealt = [r for k in range(7) for r in rows[k::7]]
+    edges = spark.createDataFrame(
+        spark.sparkContext.parallelize(dealt, 7), "a_id BIGINT, b_id BIGINT"
+    )
+    stats: dict = {}
+    comp, n_jobs = count_jobs(
+        spark, "cc_width_one",
+        lambda: connected_components(edges, "a_id", "b_id", stats=stats),
+    )
+    got = {(r.node, r.component) for r in comp.collect()}
+    want = {(i, 1) for i in range(1, 101)} | {(200 + i, 200) for i in range(5)}
+    assert got == want
+    assert stats == {"rounds": 0, "edges": len(chain) + len(clique)}
+    assert n_jobs <= 3, n_jobs
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -207,9 +207,11 @@ def test_zorder_key_bounds(spark):
     assert stats.n > 10
 
 
-def test_connected_components_random_graphs_vs_union_find(spark):
+def test_connected_components_random_graphs_vs_union_find(spark, monkeypatch):
     """Random graphs (varying density, incl. long paths + stars) must match
-    a driver-side union-find oracle exactly."""
+    a driver-side union-find oracle exactly, both at loop width 1 (the
+    union-find alone) and with the width forced above 1 (the distributed
+    rounds)."""
     import random
 
     from printer_etl_hub_spark.operators.components import connected_components
@@ -238,17 +240,27 @@ def test_connected_components_random_graphs_vs_union_find(spark):
         cases.append([(rng.randrange(n), rng.randrange(n)) for _ in range(m)])
     cases.append([(i, i + 1) for i in range(30)])          # path
     cases.append([(0, i) for i in range(1, 30)])           # star
-    for edges in cases:
-        edges = [(a, b) for a, b in edges if a != b]
-        if not edges:
-            continue
-        df = spark.createDataFrame(edges, "a_id BIGINT, b_id BIGINT")
-        got = {
-            (r.node, r.component)
-            for r in connected_components(df, "a_id", "b_id").collect()
-        }
-        want = set(uf_components(edges).items())
-        assert got == want
+    for rows_per_part in (None, 8):
+        if rows_per_part:
+            monkeypatch.setattr(
+                "printer_etl_hub_spark.execution.LOOP_ROWS_PER_PARTITION",
+                rows_per_part,
+            )
+        for edges in cases:
+            edges = [(a, b) for a, b in edges if a != b]
+            if not edges:
+                continue
+            df = spark.createDataFrame(edges, "a_id BIGINT, b_id BIGINT")
+            stats: dict = {}
+            got = {
+                (r.node, r.component)
+                for r in connected_components(
+                    df, "a_id", "b_id", stats=stats
+                ).collect()
+            }
+            want = set(uf_components(edges).items())
+            assert got == want
+            assert (stats["rounds"] >= 1) == bool(rows_per_part), stats
 
 
 def test_repetition_and_chunking_match_python(spark):
