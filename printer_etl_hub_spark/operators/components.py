@@ -100,8 +100,11 @@ def connected_components(
     # The cut is LAZY and the sizing count is its materializing action
     # (r14): an eager cut followed by a count paid two job submissions for
     # one materialization (the CC round idiom, applied to the edge cut).
+    # The count runs on the cut's RDD, in the JVM: a DataFrame count()
+    # plans a single-partition exchange, which AQE runs as a query-stage
+    # job of its own; the RDD count is one job and no row reaches Python.
     edges = edges.localCheckpoint(eager=False)
-    n_edges = edges.count()
+    n_edges = edges._jdf.queryExecution().toRdd().count()
     spark = edges.sparkSession
     # Round-loop execution posture (r13 optimization, guide §1.2/§2):
     # AQE OFF and a shuffle width derived from the symmetrized edge count

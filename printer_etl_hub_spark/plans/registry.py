@@ -4,19 +4,13 @@
 correctness driver gates the FIRST 50 entries each round. ``GATE_ORDER``
 makes that window explicit so coverage can be rotated deliberately.
 
-Round-13 window (executes the round-12 pre-committed backfill plan —
-VERDICT r12 "Next round" item #1): the r7 remainder in numeric
-order leads (q72, q77, q82-q91, q93-q97, q108, q124, q141-q148 —
-27 queries; the r12 pre-commit prose miscounted this cohort as 26,
-so one fewer r8 slot fits than it predicted), then the 13 round-12
-additions (q279-q291: Welch t, Spearman rho, Cramér's V, Wilcoxon
-signed-rank, Brown-Forsythe, Cohen's kappa, Calinski-Harabasz,
-Davies-Bouldin, temperature mixture, dim robust scaling, Pettitt
-changepoint, CUPED, McNemar — each oracle-verified exact at
-sf0.001 + sf0.01 in-session at r12, each with a SCALE wave-31..36
-clone invariant AND an independent Python formula pin), then the
-r8 cohort (q149-q198) in numeric order to fill the 50 slots
-(q149-q158 fit; q159-q198 lead round 14).
+Round-15 window (executes the round-14 pre-committed backfill plan
+below): the r8 remainder q159-q198 in numeric order (40), then the
+first ten round-13 additions q292-q301 (log-rank, Cliff's delta,
+Cochran's Q, Ljung-Box, binned drift, Durbin-Watson, silhouette, runs
+test, ANOVA F, curriculum phases; each oracle-verified exact at
+sf0.001 + sf0.01 before entering the window). q302-q313 lead the next
+window.
 
 Round-14 backfill plan (pre-committed): the r8 remainder in numeric
 order (q159-q198 — 40), then the round-13 additions q292-q313 (22:
@@ -38,7 +32,10 @@ follows in module order, so the full surface stays importable and
 tested either way.
 
 Rotation ledger (newest external green per query, as of the END of
-r12, verified against CORRECTNESS_r01-r12):
+r14, verified against CORRECTNESS_r01-r14):
+r13, r14: q72, q77, q82-q91, q93-q97, q108, q124, q141-q148,
+    q279-q291, q149-q158 (the round-13 window, gated in both rounds;
+    CORRECTNESS_r13 and CORRECTNESS_r14 each hold these 50, all green);
 r12: q76, q78-q81, q92, q114, q123, q126, q127, q132, q138-q140,
     q266-q278, q12, q14, q16-q19, q28, q31, q38-q45, q49, q50,
     q52-q56 (all 50; CORRECTNESS_r12 ≡ the round-12 GATE_ORDER);
@@ -48,11 +45,10 @@ r10: q241-q254, q02, q04, q06, q08-q11, q13, q15, q25, q100, q101,
     q103, q105-q107, q109-q113, q115-q122, q125, q128-q131, q133,
     q134;
 r9: q199-q240, q98, q99, q102, q104, q01, q03, q05, q07;
-r8: q149-q198;
-r7: q72, q77, q82-q91, q93-q97, q108, q124, q141-q148;
+r8: q159-q198 (q149-q158 since re-gated, r13-r14);
 never: q37 (by design), q292-q313 (landed round 13 AFTER that round's
     window was committed; oracle-verified exact at sf0.001 + sf0.01
-    in-session at r13 and pre-committed to the round-14 window).
+    in-session at r13; q292-q301 enter the round-15 window).
 """
 
 from __future__ import annotations
@@ -81,61 +77,58 @@ _ALL: dict[str, tuple] = {
 
 #: First 50 = the driver's correctness window for this round.
 GATE_ORDER = [
-    # Round-13 window (executes the round-12 pre-committed backfill
-    # plan - VERDICT r12 "Next round" item #1): the 27 r7-remainder
-    # queries lead, then the 13 round-12 additions (q279-q291, first
-    # external gate), then the r8 cohort in numeric order until the
-    # 50 slots fill (through q158; q159 onward rolls to round 14).
-    "q72_dup_clusters",
-    "q77_token_shards",
-    "q82_embedding_dedup",
-    "q83_brother_toner",
-    "q84_repetition_quality",
-    "q85_chunk_windows",
-    "q86_ngram_collision",
-    "q87_mixture_sample",
-    "q88_label_centroids",
-    "q89_unigram_commonness",
-    "q90_bloom_decontam",
-    "q91_segment_dedup",
-    "q93_lloyd_step",
-    "q94_kmeans_train",
-    "q95_quality_deciles",
-    "q96_source_leakage",
-    "q97_sequence_spans",
-    "q108_incremental_minhash",
-    "q124_vocab_coverage",
-    "q141_gopher_rules",
-    "q142_repetition_fractions",
-    "q143_kn_score",
-    "q144_langid_margin",
-    "q145_mixture_weights",
-    "q146_threshold_sweep",
-    "q147_ngram_novelty",
-    "q148_length_moments",
-    "q279_welch_t",
-    "q280_spearman_rho",
-    "q281_cramers_v",
-    "q282_wilcoxon_signed",
-    "q283_brown_forsythe",
-    "q284_cohens_kappa",
-    "q285_calinski_harabasz",
-    "q286_davies_bouldin",
-    "q287_temperature_mixture",
-    "q288_dim_robust_scaling",
-    "q289_pettitt",
-    "q290_cuped",
-    "q291_mcnemar",
-    "q149_pii_density",
-    "q150_label_outliers",
-    "q151_effective_tokens",
-    "q152_minhash_calibration",
-    "q153_crosslingual_dups",
-    "q154_rare_tokens",
-    "q155_degree_histogram",
-    "q156_quality_dup_crosstab",
-    "q157_collocations",
-    "q158_langid_confusion",
+    # Round-15 window (the round-14 pre-committed plan): the r8
+    # remainder q159-q198, then the round-13 additions q292-q301.
+    "q159_oov_curve",
+    "q160_sentence_stats",
+    "q161_template_prefixes",
+    "q162_length_percentiles",
+    "q163_incremental_exact_dedup",
+    "q164_ivf_balance",
+    "q165_pq_distortion",
+    "q166_char_class_profile",
+    "q167_source_vocab_overlap",
+    "q168_event_rate_anomaly",
+    "q169_token_burstiness",
+    "q170_cluster_spread",
+    "q171_band_bucket_stats",
+    "q172_quality_histogram",
+    "q173_readability",
+    "q174_kwic",
+    "q175_lsh_pair_budget",
+    "q176_centroid_distances",
+    "q177_sq8_error",
+    "q178_embedding_integrity",
+    "q179_token_df_spectrum",
+    "q180_source_dup_matrix",
+    "q181_chunk_plan",
+    "q182_band_config_sweep",
+    "q183_shard_leakage",
+    "q184_dim_variance",
+    "q185_packing_sweep",
+    "q186_dup_cluster_sizes",
+    "q187_corpus_delta",
+    "q188_norm_outliers",
+    "q189_len_quality_corr",
+    "q190_kn_band_routing",
+    "q191_rolling_active_users",
+    "q192_event_transitions",
+    "q193_vocab_drift",
+    "q194_dedup_adjusted_mixture",
+    "q195_containment_pairs",
+    "q196_ivf_probe_sweep",
+    "q197_template_suffixes",
+    "q198_snapshot_neardup",
+    "q292_logrank",
+    "q293_cliffs_delta",
+    "q294_cochran_q",
+    "q295_ljung_box",
+    "q296_binned_drift",
+    "q297_durbin_watson",
+    "q298_silhouette",
+    "q299_runs_test",
+    "q300_anova_f",
+    "q301_curriculum_phases",
 ]
 
 # Import-time contract checks. Explicit raises (not assert) so the

@@ -13,6 +13,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: The directory that holds this package: Python workers import it from
+#: here whatever the driver's working directory.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 #: Runtime-settable confs every session of the engine needs: ``get_spark``
 #: builds with them and ``apply_runtime_conf`` sets them on a session built
 #: elsewhere.
@@ -76,6 +80,12 @@ def get_spark(
         # makes about 3x the round trips with it. Static: a running session
         # cannot change it.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Python workers start from worker_daemon: with the installed
+        # pyspark at the zip's version it drops Spark's archives from their
+        # path, whose directories every task would re-read. Spark merges
+        # this PYTHONPATH with its own. Static, like the call-site conf.
+        .config("spark.python.daemon.module", "printer_etl_hub_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     # Shuffle/spill through tmpfs when available: local-mode shuffles are
     # disk-bound on this host's slow /tmp. On a cluster the platform sets
@@ -102,15 +112,18 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     must be UTC to line up with the (UTC-naive) DuckDB oracle. AQE is forced
     on, and it is a trade-off, not a free win: it re-plans joins and
     coalesces partitions from runtime statistics, but each query stage is
-    its own Spark job. q72 at sf0.01 runs 15 jobs with AQE and 5 without
+    its own Spark job. q72 at sf0.01 runs 14 jobs with AQE and 5 without
     (same rows), and at sf0.1 some queries are faster without it and others
     slower.
 
     ``get_spark`` also turns off PySpark's call-site capture
     (``spark.python.sql.dataFrameDebugging.enabled``), which costs extra
-    py4j round trips on every Column/DataFrame call. That conf is static,
-    so it cannot be applied here: a session built elsewhere keeps the
-    capture on.
+    py4j round trips on every Column/DataFrame call, and starts Python
+    workers from ``worker_daemon`` with this package on their
+    ``PYTHONPATH`` (``spark.python.daemon.module``,
+    ``spark.executorEnv.PYTHONPATH``). Those confs are static, so they
+    cannot be applied here: a session built elsewhere keeps the capture on
+    and Spark's default worker, whose tasks re-read ``pyspark.zip``.
     """
     for k, v in RUNTIME_CONF.items():
         try:

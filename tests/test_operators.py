@@ -380,9 +380,9 @@ def test_connected_components_width_one_is_one_union_find(spark):
     """A graph that fits one loop partition is labeled by the union-find
     alone: the one task sees every edge, so its roots are the component
     minima. The operator runs no convergence probe and no round — the
-    edge cut's count (two jobs under AQE) and the labels' checkpoint are
-    its only jobs — even with the edges dealt round-robin over 7
-    partitions, so no partition holds a connected fragment."""
+    edge cut's count (one job, on the cut's RDD) and the labels'
+    checkpoint are its only jobs — even with the edges dealt round-robin
+    over 7 partitions, so no partition holds a connected fragment."""
     from conftest import count_jobs
 
     from printer_etl_hub_spark.operators.components import connected_components
@@ -403,7 +403,7 @@ def test_connected_components_width_one_is_one_union_find(spark):
     want = {(i, 1) for i in range(1, 101)} | {(200 + i, 200) for i in range(5)}
     assert got == want
     assert stats == {"rounds": 0, "edges": len(chain) + len(clique)}
-    assert n_jobs <= 3, n_jobs
+    assert n_jobs <= 2, n_jobs
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -451,11 +451,9 @@ def test_bruteforce_topk_refuses_oversized_input(spark):
 
 def test_registry_gate_window_is_complete_and_oracled():
     """The driver gates the first 50 REGISTRY entries: every one of them
-    must carry an oracle (no structurally-red rows). Round 13 executes
-    the round-12 pre-committed backfill plan (VERDICT r12 item #1): the
-    27 r7-remainder queries lead, then the 13 round-12 additions
-    q279-q291 (first external CORRECTNESS rows), then the r8 cohort in
-    numeric order through q158."""
+    must carry an oracle (no structurally-red rows). The window follows
+    the round-14 pre-committed backfill plan: the r8 remainder q159-q198
+    in numeric order, then the round-13 additions q292-q301."""
     import re
 
     from printer_etl_hub_spark.plans import REGISTRY
@@ -467,10 +465,8 @@ def test_registry_gate_window_is_complete_and_oracled():
     assert not unoracled, unoracled
     nums = [int(re.match(r"q(\d+)_", w).group(1)) for w in window]
     assert nums == (
-        [72, 77] + list(range(82, 92)) + list(range(93, 98))
-        + [108, 124] + list(range(141, 149))       # the 27 r7 leftovers
-        + list(range(279, 292))        # the round-12 additions
-        + list(range(149, 159))        # r8 cohort — 50 slots exactly
+        list(range(159, 199))          # the r8 remainder
+        + list(range(292, 302))        # round-13 additions — 50 slots exactly
     ), nums
 
 
